@@ -838,8 +838,7 @@ def kg_triples_resumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         try:
             run_pipeline(
-                spark, sf_dir, root, n_buckets=8, num_partitions=8,
-                fail_after={"mentions": 3},
+                spark, sf_dir, root, n_buckets=8, fail_after={"mentions": 3}
             )
             raise AssertionError("simulated crash did not fire")
         except RuntimeError:
@@ -851,7 +850,7 @@ def kg_triples_resumed(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 f"expected 3 committed buckets after crash, saw {len(committed)}"
             )
-        trip = run_pipeline(spark, sf_dir, root, n_buckets=8, num_partitions=8)
+        trip = run_pipeline(spark, sf_dir, root, n_buckets=8)
         return trip.select("subj", "pred", "obj", "surface").localCheckpoint(
             eager=True
         )
@@ -6593,13 +6592,12 @@ def kg_checkpoint_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         try:
             run_pipeline(
-                spark, sf_dir, root, n_buckets=8, num_partitions=8,
-                fail_after={"mentions": 3},
+                spark, sf_dir, root, n_buckets=8, fail_after={"mentions": 3}
             )
             raise AssertionError("simulated crash did not fire")
         except RuntimeError:
             pass
-        run_pipeline(spark, sf_dir, root, n_buckets=8, num_partitions=8)
+        run_pipeline(spark, sf_dir, root, n_buckets=8)
         lineage = IceTable(root).current_snapshot()["lineage"]
         agg: dict = {}
         for entry in lineage:

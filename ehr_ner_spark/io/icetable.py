@@ -60,6 +60,13 @@ from pyspark.sql import functions as F
 BUCKET_COL = "icetable_bucket"
 
 
+def bucket_of(key: str, n_buckets: int):
+    """The bucket a row belongs to: ``pmod(xxhash64(key), n_buckets)``.
+    :meth:`IceTable.write_stage` commits by it; a stage's producer can tag
+    its input with it to compute only the pending buckets."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+
 class CommitConflict(RuntimeError):
     """Another writer advanced CURRENT past this commit's expected parent
     (Iceberg's optimistic-concurrency failure) — re-read and retry."""
@@ -169,6 +176,10 @@ class IceTable:
     def stage_complete(self, stage: str, n_buckets: int) -> bool:
         return len(self.committed_buckets(stage)) == n_buckets
 
+    def pending_buckets(self, stage: str, n_buckets: int) -> list:
+        done = self.committed_buckets(stage)
+        return [b for b in range(n_buckets) if b not in done]
+
     # -- write / read -------------------------------------------------------
     def write_stage(
         self,
@@ -186,15 +197,13 @@ class IceTable:
         PARTIAL manifest, like a job that died between bucket commits).
         """
         t0 = time.time()
-        done = self.committed_buckets(stage)
-        pending = [b for b in range(n_buckets) if b not in done]
+        pending = self.pending_buckets(stage, n_buckets)
         if not pending:
             return self.current_snapshot()
 
         stage_dir = os.path.join(self.root, "data", stage)
         bucketed = df.withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets)).cast("int"),
+            BUCKET_COL, bucket_of(bucket_key, n_buckets)
         ).where(F.col(BUCKET_COL).isin(pending))
         # one output dir per bucket; Spark writes buckets in parallel
         tmp_dir = os.path.join(stage_dir, f".job-{uuid.uuid4().hex[:8]}")

@@ -20,13 +20,20 @@ against.
 
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 
 from .iob2 import Span, decode_bio
 from .scorer import ID2LABEL, DeterministicQAScorer
-from .wordpiece import assemble, merge_wordpieces, strip_specials, tokenize_text
+from .wordpiece import (
+    assemble,
+    merge_wordpieces,
+    strip_specials,
+    tokenize_text,
+    wp_split_seq,
+)
 
 
 def predict_one_query(
@@ -46,6 +53,42 @@ def predict_one_query(
     m_tokens, m_labels = merge_wordpieces(seq, labels)
     p_tokens, p_labels = strip_specials(m_tokens, m_labels)
     return decode_bio(p_tokens, p_labels, pid=pid)
+
+
+def _battery_plan(battery: Sequence[Tuple[str, Sequence[str]]]):
+    """Per-battery constants of the battery fast paths: each query's
+    WordPiece sub-tokens, the tags grouped by sub-token length (equal
+    lengths share one truncation limit), the longest length and every tag.
+    A worker scores every document against the same battery, so the plan
+    is memoized on the battery's value."""
+    return _battery_plan_of(tuple((tag, tuple(q)) for tag, q in battery))
+
+
+@lru_cache(maxsize=32)
+def _battery_plan_of(battery: Tuple[Tuple[str, Tuple[str, ...]], ...]):
+    q_subs = [tuple(wp_split_seq(q)) for _tag, q in battery]
+    by_len: dict = {}
+    for (tag, _q), q_sub in zip(battery, q_subs):
+        by_len.setdefault(len(q_sub), []).append(tag)
+    max_qlen = max((len(q) for q in q_subs), default=0)
+    # tuples: the plan is shared by every call, and the scorer keys its
+    # memo on tuple(tags), which is then free
+    by_len = {n: tuple(tags) for n, tags in by_len.items()}
+    return q_subs, by_len, max_qlen, tuple(tag for tag, _q in battery)
+
+
+def _merged_heads(pieces: Sequence[str]) -> Tuple[List[int], List[str]]:
+    """WordPiece merge without the special tokens: the positions of the
+    token heads (a head keeps the label, P8) and each merged token, the
+    head plus its ``##`` continuations."""
+    heads = [i for i, p in enumerate(pieces) if "##" not in p]
+    merged: List[str] = []
+    for j, hidx in enumerate(heads):
+        stop = heads[j + 1] if j + 1 < len(heads) else len(pieces)
+        merged.append(
+            pieces[hidx] + "".join(p[2:] for p in pieces[hidx + 1 : stop])
+        )
+    return heads, merged
 
 
 def predict_battery(
@@ -71,24 +114,15 @@ def predict_battery(
     * decode uses the uniform-type fast automaton (types all == q_tag).
     """
     from .iob2 import decode_bio_uniform_battery
-    from .wordpiece import SEP, wp_split
+    from .wordpiece import SEP
 
-    p_sub: List[str] = []
-    for t in passage_tokens:
-        p_sub.extend(wp_split(t))
-
-    # group query tags by their sub-token length (same truncation limit);
+    p_sub = wp_split_seq(passage_tokens)
     # when NO tag truncates this passage (the overwhelmingly common case:
     # limits are ~495+ pieces), every group scores the identical sequence —
     # collapse to ONE whole-battery pass and skip the per-group overhead
-    by_len: dict = {}
-    max_qlen = 0
-    for q_tag, q_tokens in battery:
-        qlen = sum(len(wp_split(t)) for t in q_tokens)
-        max_qlen = max(max_qlen, qlen)
-        by_len.setdefault(qlen, []).append(q_tag)
+    _q_subs, by_len, max_qlen, all_tags = _battery_plan(battery)
     if len(p_sub) <= max_seq_length - max_qlen - 3:
-        by_len = {max_qlen: [t for t, _q in battery]}
+        by_len = {max_qlen: all_tags}
 
     out: List[Span] = []
     for qlen, tags in by_len.items():
@@ -97,13 +131,7 @@ def predict_battery(
         scored = [SEP] + pieces
         tag_mat = scorer.top1_tags_battery(tags, scored)  # (Q, 1 + n_pieces)
         # merged (post-##) token heads and surface strings, shared by tags
-        heads = [i for i, p in enumerate(pieces) if "##" not in p]
-        merged: List[str] = []
-        for j, hidx in enumerate(heads):
-            stop = heads[j + 1] if j + 1 < len(heads) else len(pieces)
-            merged.append(
-                pieces[hidx] + "".join(p[2:] for p in pieces[hidx + 1 : stop])
-            )
+        heads, merged = _merged_heads(pieces)
         if not heads:
             continue
         head_arr = 1 + np.asarray(heads, dtype=np.int64)  # skip the [SEP]
@@ -164,21 +192,12 @@ def predict_battery_crf(
     from .crf import crf_forward_prefix, viterbi_battery
     from .iob2 import decode_bio_uniform_battery
     from .scorer import CLASS_WEIGHTS
-    from .wordpiece import CLS, SEP, wp_split
+    from .wordpiece import CLS, SEP
 
-    p_sub: List[str] = []
-    for t in passage_tokens:
-        p_sub.extend(wp_split(t))
-
-    by_len: dict = {}
-    max_qlen = 0
+    p_sub = wp_split_seq(passage_tokens)
+    q_subs, by_len, max_qlen, all_tags = _battery_plan(battery)
     prefixes: dict = {}
-    for q_tag, q_tokens in battery:
-        q_sub = []
-        for t in q_tokens:
-            q_sub.extend(wp_split(t))
-        max_qlen = max(max_qlen, len(q_sub))
-        by_len.setdefault(len(q_sub), []).append(q_tag)
+    for (q_tag, _q), q_sub in zip(battery, q_subs):
         # memo key includes the question text AND the scorer's identity:
         # the cached prefix is crf_forward_prefix(scorer.logits(...)), so it
         # depends on the sub-token sequence (two batteries can map the same
@@ -187,16 +206,14 @@ def predict_battery_crf(
         # Every shipped scorer's emissions are fully class-determined;
         # a stateful implementation (e.g. torch weights) must expose a
         # distinct ``cache_token`` attribute.
-        memo_key = (
-            getattr(scorer, "cache_token", type(scorer)), q_tag, tuple(q_sub)
-        )
+        memo_key = (getattr(scorer, "cache_token", type(scorer)), q_tag, q_sub)
         pref = _prefix_cache.get(memo_key)
         if pref is None:
-            em_q = scorer.logits(q_tag, [CLS] + q_sub + [SEP]) * CLASS_WEIGHTS
+            em_q = scorer.logits(q_tag, [CLS, *q_sub, SEP]) * CLASS_WEIGHTS
             pref = _prefix_cache[memo_key] = crf_forward_prefix(em_q)
         prefixes[q_tag] = pref
     if len(p_sub) <= max_seq_length - max_qlen - 3:
-        by_len = {max_qlen: [t for t, _q in battery]}
+        by_len = {max_qlen: all_tags}
 
     out: List[Span] = []
     for qlen, tags in by_len.items():
@@ -208,15 +225,9 @@ def predict_battery_crf(
         em_w = scorer.logits_battery(tags, scored) * CLASS_WEIGHTS
         prefix = np.stack([prefixes[t] for t in tags])
         states = viterbi_battery(prefix, em_w[:, 1:-1], em_w[:, -1])
-        heads = [i for i, p in enumerate(pieces) if "##" not in p]
+        heads, merged = _merged_heads(pieces)
         if not heads:
             continue
-        merged: List[str] = []
-        for j, hidx in enumerate(heads):
-            stop = heads[j + 1] if j + 1 < len(heads) else len(pieces)
-            merged.append(
-                pieces[hidx] + "".join(p[2:] for p in pieces[hidx + 1 : stop])
-            )
         head_arr = np.asarray(heads, dtype=np.int64)
         char_mat = np.array(["B", "I", "O"], dtype="U1")[states[:, head_arr]]
         out.extend(decode_bio_uniform_battery(merged, char_mat, tags, pid=pid))

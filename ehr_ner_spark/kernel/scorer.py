@@ -44,14 +44,6 @@ def hash60(query_tag: str, token: str) -> int:
     return md5_60(query_tag + "|" + token)
 
 
-def _token_hashes(query_tag: str, tokens: Sequence[str]) -> np.ndarray:
-    return np.fromiter(
-        (hash60(query_tag, t) for t in tokens),
-        dtype=np.uint64,
-        count=len(tokens),
-    )
-
-
 def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     m = x - x.max(axis=axis, keepdims=True)
     e = np.exp(m)

@@ -65,8 +65,10 @@ def column_stats(df: DataFrame) -> DataFrame:
         # CBO needs), rendered to varchar only afterwards.
         g = df.groupBy(c).agg(F.count(F.lit(1)).alias("cnt"))
         col, cnt = F.col(c), F.col("cnt")
+        # an empty input has no groups, so the sums are NULL; the oracle's
+        # COUNT(*) is 0 (its n_null SUM is NULL too)
         one = g.agg(
-            F.sum("cnt").cast("long").alias("n_rows"),
+            F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n_rows"),
             F.sum(F.when(col.isNull(), cnt).otherwise(0))
             .cast("long").alias("n_null"),
             # ndv = non-null distinct values = non-null groups
@@ -87,7 +89,9 @@ def column_stats(df: DataFrame) -> DataFrame:
         "ndv",
         "min_v",
         "max_v",
-        F.when(F.col("n_rows") - F.col("n_null") == 0, F.lit(0))
+        # no non-null value <=> ndv 0, the oracle's COUNT(col) = 0 (on an
+        # empty input n_null and tot_len are NULL, so only ndv can tell)
+        F.when(F.col("ndv") == 0, F.lit(0))
         .otherwise(_avg_width_micro("tot_len", "(n_rows - n_null)"))
         .cast("long")
         .alias("avg_width_micro"),

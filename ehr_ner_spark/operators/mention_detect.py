@@ -17,9 +17,13 @@ loop:
   the (large) ``content`` column never hits the shuffle or the Python
   channel — each document's content crosses Arrow exactly once, is tokenized
   exactly once, and only the (small) span rows are amplified.
-* Explicit ``repartition(num_partitions, doc_id)`` before the scorer (the
-  north rule's "explicit repartitioning on document hash") balances the
-  scoring stage regardless of upstream file layout / skewed repos.
+* The scorer's input is repartitioned on document hash (the north rule's
+  "explicit repartitioning on document hash").  Only an explicit
+  ``num_partitions`` fixes the task count: a bare ``repartition(doc_id)``
+  is coalesced by AQE, and a sub-MB corpus then scores in ONE task.
+  ``num_partitions=0`` keeps the caller's partitioning —
+  ``pipeline.run_pipeline`` partitions by IceTable bucket, so each bucket
+  is scored, and committed, by exactly one task.
 * The UDF is ``mapInPandas`` (iterator-of-batches), so the scorer is
   constructed once per Python worker, not once per row — the model-resident
   pattern the reference gets from a long-lived predictor object

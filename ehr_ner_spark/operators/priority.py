@@ -1,4 +1,5 @@
-"""D4/D5/D6: flat-projection overlap resolution, set difference, union.
+"""D1/D4/D5: exact dedup, flat-projection overlap resolution, set
+difference.
 
 Reference: /root/reference/data_process/df2qasl.py:114-210 —
 
@@ -9,8 +10,11 @@ Reference: /root/reference/data_process/df2qasl.py:114-210 —
   sorted list reduces to argmax(priority) with ties keeping the earlier
   (lexicographically smaller) type — i.e. a window rank, the reference's
   only window-function-shaped computation;
-* D5: nested − flat set difference (df2qasl.py:207-210);
-* D6: unionByName concat of answer sources.
+* D5: nested − flat set difference (df2qasl.py:207-210).
+
+D2 (ordering) and D6 (concat) need no operator of their own: results are
+compared order-insensitively, and answer sources union with
+``unionByName`` where they are combined.
 """
 
 from __future__ import annotations
@@ -59,15 +63,6 @@ def nested_minus_flat(nested: DataFrame, flat: DataFrame) -> DataFrame:
     )
 
 
-def concat_answers(*sources: DataFrame) -> DataFrame:
-    """D6: union of answer lists (nested overlay keeps duplicates across
-    sources until an explicit D1)."""
-    out = sources[0].select(*SPAN_COLS)
-    for s in sources[1:]:
-        out = out.unionByName(s.select(*SPAN_COLS))
-    return out
-
-
 def apply_corrections(spans: DataFrame, corrections: DataFrame) -> DataFrame:
     """J4: pid-keyed merge of human-checked corrections onto model spans
     (the xlsx round-trip semantics of /root/reference/data_process/
@@ -93,9 +88,3 @@ def apply_corrections(spans: DataFrame, corrections: DataFrame) -> DataFrame:
         )
         .drop("action", "new_type")
     )
-
-
-def canonical_order(spans: DataFrame) -> DataFrame:
-    """D2: sink-side ordering by (start_pos, end_pos, type)
-    (df2qasl.py:188-190; demo/app.py:92)."""
-    return spans.orderBy("pid", "start_pos", "end_pos", "type")

@@ -2,14 +2,12 @@
 
 Verbatim from the reference's public demo battery
 (/root/reference/demo/app.py:17-49); also loaded from JSON at
-/root/reference/api/bert_qasl_predictor.py:39-42.  In Spark this is a tiny
-dimension table that is ALWAYS broadcast (J1: the docs x queries expansion is
-a broadcast nested-loop join, never a shuffle).
+/root/reference/api/bert_qasl_predictor.py:39-42.  In Spark it travels to
+the workers as a broadcast variable (J1: the docs x queries expansion runs
+inside the scorer UDF, never as a shuffle).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 QUERIES: dict[str, str] = {
     "ADD": "入院日期",
@@ -58,10 +56,3 @@ PRIORITY: dict[str, float] = {
     # table (SGN/DTN/DPN never collide with date spans there); rank lowest.
     "SGN": -1, "DTN": -1, "DPN": -1,
 }
-
-
-def queries_df(spark: SparkSession) -> DataFrame:
-    """Query battery as a broadcastable dimension DataFrame."""
-    return spark.createDataFrame(
-        [(k, v) for k, v in QUERIES.items()], "q_tag string, query string"
-    )

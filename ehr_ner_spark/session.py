@@ -12,18 +12,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` if set, else the number of cores this process
+    may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "ehr_ner_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
+    # a non-numeric value ("*") means every core
+    n = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         # size to parallelism; at cluster scale this is ~2-3x total cores
         # (AQE coalesces small partitions back down at runtime)
-        n = int(cpus) if cpus.isdigit() else 32
         shuffle_partitions = max(2 * n, 8)
     b = (
         SparkSession.builder.appName(app_name)
@@ -54,7 +61,7 @@ def get_spark(
         # partition and every pre-shuffle stage (explode, hash, Arrow UDF)
         # runs on one core.  At warehouse scale files outnumber cores and
         # this floor is a no-op.
-        .config("spark.sql.files.minPartitionNum", str(2 * (int(cpus) if cpus.isdigit() else 32)))
+        .config("spark.sql.files.minPartitionNum", str(2 * n))
         # deterministic TIMESTAMP_NTZ <-> epoch conversions everywhere
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -50,6 +50,26 @@ def test_column_stats_hand_values(spark):
     assert sd["avg_width_micro"] == 0
 
 
+def test_column_stats_empty_input_matches_oracle(spark):
+    """An empty table yields the DuckDB twin's rows: zero rows and zero
+    width, not NULLs."""
+    import duckdb
+
+    from ehr_ner_spark.operators import colstats
+
+    cols = ("l_orderkey BIGINT, l_shipdate DATE, l_returnflag STRING,"
+            " l_linestatus STRING")
+    got = sorted(
+        tuple(r) for r in colstats.column_stats(
+            spark.createDataFrame([], cols)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE lineitem ({cols})")
+    want = sorted(con.execute(colstats.column_stats_sql()).fetchall())
+    assert got == want
+    assert [(r[1], r[-1]) for r in got] == [(0, 0)] * len(colstats.STAT_COLS)
+
+
 def test_bootstrap_ci_matches_python_replication(spark):
     vals = {i: 50 + 7 * (i % 13) for i in range(120)}
     docs = spark.createDataFrame(

@@ -24,14 +24,14 @@ def test_kill_resume_identical(spark, sf_dir, tmp_path):
     crash_root = str(tmp_path / "crash")
 
     golden = _triples_set(
-        run_pipeline(spark, sf_dir, clean_root, n_buckets=8, num_partitions=4)
+        run_pipeline(spark, sf_dir, clean_root, n_buckets=8)
     )
     assert golden
 
     # crash after 3 of 8 mention buckets
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_pipeline(
-            spark, sf_dir, crash_root, n_buckets=8, num_partitions=4,
+            spark, sf_dir, crash_root, n_buckets=8,
             fail_after={"mentions": 3},
         )
     t = IceTable(crash_root)
@@ -42,7 +42,7 @@ def test_kill_resume_identical(spark, sf_dir, tmp_path):
     # crash again later, in the canon stage
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_pipeline(
-            spark, sf_dir, crash_root, n_buckets=8, num_partitions=4,
+            spark, sf_dir, crash_root, n_buckets=8,
             fail_after={"canon": 2},
         )
     t2 = IceTable(crash_root)
@@ -54,7 +54,7 @@ def test_kill_resume_identical(spark, sf_dir, tmp_path):
 
     # final resume completes the run
     resumed = _triples_set(
-        run_pipeline(spark, sf_dir, crash_root, n_buckets=8, num_partitions=4)
+        run_pipeline(spark, sf_dir, crash_root, n_buckets=8)
     )
     assert resumed == golden
 
@@ -67,11 +67,88 @@ def test_kill_resume_identical(spark, sf_dir, tmp_path):
     assert IceTable(crash_root).current_snapshot()["seq"] > snap_seq_after_crash
 
 
+def test_resume_scores_only_pending_buckets(spark, sf_dir, tmp_path, monkeypatch):
+    """A fresh run commits at most one mentions file per bucket; a resumed
+    run sends the scorer exactly the documents of the pending buckets."""
+    from pyspark.sql import functions as F
+
+    import ehr_ner_spark.pipeline as pipeline
+    from ehr_ner_spark.corpus import corpus
+
+    clean_root = str(tmp_path / "clean")
+    golden = _triples_set(run_pipeline(spark, sf_dir, clean_root, n_buckets=8))
+    buckets = IceTable(clean_root).committed_buckets("mentions")
+    assert len(buckets) == 8
+    assert all(len(b["files"]) <= 1 for b in buckets.values())
+
+    crash_root = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_pipeline(
+            spark, sf_dir, crash_root, n_buckets=8, fail_after={"mentions": 3}
+        )
+    done = IceTable(crash_root).committed_buckets("mentions")
+    pending = [b for b in range(8) if b not in done]
+    assert len(pending) == 5
+
+    scored = []
+    detect = pipeline.detect_mentions
+
+    def capture(docs, **kw):
+        scored.append(sorted(r.doc_id for r in docs.select("doc_id").collect()))
+        return detect(docs, **kw)
+
+    monkeypatch.setattr(pipeline, "detect_mentions", capture)
+    resumed = _triples_set(run_pipeline(spark, sf_dir, crash_root, n_buckets=8))
+
+    want = sorted(
+        r.doc_id for r in corpus(spark, sf_dir)
+        .where(F.pmod(F.xxhash64("doc_id"), F.lit(8)).isin(pending))
+        .select("doc_id").collect()
+    )
+    assert want and scored == [want]
+    assert resumed == golden
+
+
+def test_main_commit_conflict_says_to_reinvoke(monkeypatch, tmp_path):
+    """A commit conflict ends the spark-submit entrypoint with a message
+    that tells the caller to re-invoke it to resume."""
+    from pyspark.sql import SparkSession
+
+    import ehr_ner_spark.pipeline as pipeline
+    from ehr_ner_spark.io.icetable import CommitConflict
+
+    class _Session:
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    session = _Session()
+
+    class _Builder:
+        def appName(self, _name):
+            return self
+
+        def getOrCreate(self):
+            return session
+
+    def conflict(*_a, **_kw):
+        raise CommitConflict("stage 'mentions' append lost the CAS race")
+
+    monkeypatch.setattr(SparkSession, "builder", _Builder())
+    monkeypatch.setattr(pipeline, "run_pipeline", conflict)
+    with pytest.raises(SystemExit) as exc:
+        pipeline.main(["--table-root", str(tmp_path / "kg")])
+    msg = str(exc.value.code)
+    assert "lost the CAS race" in msg and "re-invoke" in msg
+    assert session.stopped
+
+
 def test_rerun_is_noop(spark, sf_dir, tmp_path):
     root = str(tmp_path / "noop")
-    first = run_pipeline(spark, sf_dir, root, n_buckets=4, num_partitions=4)
+    first = run_pipeline(spark, sf_dir, root, n_buckets=4)
     seq1 = IceTable(root).current_snapshot()["seq"]
-    second = run_pipeline(spark, sf_dir, root, n_buckets=4, num_partitions=4)
+    second = run_pipeline(spark, sf_dir, root, n_buckets=4)
     seq2 = IceTable(root).current_snapshot()["seq"]
     assert seq1 == seq2  # nothing recomputed, no new snapshot
     assert _triples_set(first) == _triples_set(second)
