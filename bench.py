@@ -1,58 +1,55 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Benchmark harness for what ``perfbench/`` does not measure.
 
-Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line::
+Runs at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 data set) on
+``local[session.default_cpus()]`` and prints the full result as ONE JSON
+line after every phase::
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "docs_per_sec": ...,
-     "scaling": {"local8_sec": ..., "local32_sec": ..., "efficiency": ...}}
+    {"metric": "...", "value": <sum of the timings>, "unit": "sec",
+     "queries": {...}, "sf": ..., "n_docs": ..., "docs_per_sec": ...,
+     "scaling": {"n_lo": N, "n_hi": 4N, "efficiency": ..., "bound": 0.8},
+     "partial": ..., "phases_skipped": [...], "queries_skipped": [...]}
 
-The scaling block evidences the north rule's N->4N requirement in-sandbox:
-the same scoring job at local[4] vs local[16] on the same input
-(efficiency = (T4/T16)/4; 16 cores = half the box, so the measurement is
-not confounded by the shared host's all-core contention), plus a
-local[8]->local[32] saturation pair with a raw-multiprocessing hardware
-calibration of the same window.  Disable with SPARK_GRAFT_BENCH_SCALING=0.
+Phases, in this order (``--phases headline,scaling,extended`` runs a
+subset):
+
+- ``headline``: ``docs_per_sec`` of one real ``pipeline.run_pipeline``
+  call on a fresh table root (IceTable commits included), then the CORE
+  queries, min-of-3 each.
+- ``scaling``: the same scoring job (battery scoring + IOB2 decode over
+  the corpus replicated ``SCALING_REP`` times) at ``local[N]`` and
+  ``local[4N]``, ``N = cores // 4``, each level in its own child process,
+  one try per level.  ``efficiency = (T_N / T_4N) / 4`` is reported next
+  to the BASELINE bound; it is a report, not a gate.
+- ``extended``: the EXTENDED coverage queries, min-of-1 each.
 
 The whole harness runs under a wall-clock budget
-(``SPARK_GRAFT_BENCH_BUDGET_SEC``, default 2700; 0 disables) and — the
-round-4 lesson, where the driver's external timeout killed the run before
-the single final print and the official record got NOTHING — emits the
-full accumulated JSON line after EVERY phase (and after every scaling
-try), newest line superseding the previous: an external kill truncates
-the evidence instead of erasing it.  Each emitted line is complete valid
-JSON carrying everything measured so far, also mirrored to
-``BENCH/last_run_partial.json``.  Budget pressure drops reps first, then
-phases (recorded in ``phases_skipped``), never the write.  Phase order
-puts the BASELINE-gated scaling pairs BEFORE the EXTENDED coverage
-queries, so a truncated run still carries the evidence that matters.
-
-``--phases headline,north,sat,pipe,extended`` runs a subset (local
-artifact hunting for quiet windows).
+(``SPARK_GRAFT_BENCH_BUDGET_SEC``, default 2700; 0 disables).  An
+external kill must truncate the evidence, not erase it, so every emitted
+line is complete JSON carrying everything measured so far, the newest
+superseding the older ones, and it is also written atomically to
+``SPARK_GRAFT_BENCH_PARTIAL`` (default ``BENCH/last_run_partial.json``).
+Budget pressure drops query reps first, then phases and queries (recorded
+in ``phases_skipped`` / ``queries_skipped``), never the write.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-DO_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
 
-# Headline benchmark queries (name -> registry key); the flagship KG
-# pipeline is timed separately since it is the throughput metric.
-# CORE = the round-2 headline set, timed min-of-reps every round (the
-# stable round-over-round comparison series); EXTENDED = everything added
-# since, timed min-of-1 (coverage without blowing the wall-clock budget —
-# r3's 61 queries at min-of-3 ate 2848 s of a 3300 s budget and the next
-# additions would have truncated the scaling evidence that matters more).
+# CORE = the round-2 headline set, timed min-of-QUERY_REPS every round
+# (the stable round-over-round comparison series); EXTENDED = everything
+# added since, timed min-of-1 (coverage without blowing the budget).
 CORE_QUERIES = [
     "rel_pricing_summary",
     "rel_top_customers",
@@ -118,37 +115,42 @@ EXTENDED_QUERIES = [
     "ds_lsh_scurve",
 ]
 
-BENCH_QUERIES = CORE_QUERIES + EXTENDED_QUERIES
+PHASES = ("headline", "scaling", "extended")
+
+#: min-of-N repetitions per CORE query: the min is the noise-robust
+#: estimator of a plan's cost on a shared host
+QUERY_REPS = 3
+#: corpus replication of the scaling job (REP x the sf0.1 corpus).
+#: Sized by measurement so the local[4] timed run lasts long enough that
+#: its fixed cost (job scheduling, Arrow hand-off) is a small share.
+SCALING_REP = 24
+#: the BASELINE N -> 4N efficiency bound, reported next to the measurement
+SCALING_BOUND = 0.8
+#: the scaling phase is skipped when less than this is left of the budget
+#: (two child sessions at local[1] and local[4]: 239 s measured on 4 vCPUs)
+SCALING_EST_SEC = 300.0
 
 
-def _session(cores: int):
-    from ehr_ner_spark.session import get_spark
-
-    return get_spark(
-        app_name=f"bench-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=2 * cores,
-        # the whole-job pair caches the replicated mention stream (~4 GiB at
-        # rep=192); the 8g default heap makes it straddle the storage
-        # fraction and spill — and spill disk is a SERIAL resource that
-        # taxes the high-parallelism side hardest, understating scaling.
-        # The box has 128 GiB; a real cluster sizes executor memory to the
-        # working set the same way.
-        extra={"spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "24g")},
-    )
-
-
-def _sink(df) -> int:
+def _sink(df) -> None:
     """Force full execution without driver materialization (noop sink)."""
     df.write.mode("overwrite").format("noop").save()
-    return 0
+
+
+def _warm_workers(spark, c) -> None:
+    """Spawn the Python workers and ship the pyfiles zip once, so a timed
+    region measures steady-state throughput (a cluster's executors are
+    long-lived; per-job worker spawn is not the workload)."""
+    from ehr_ner_spark.operators.mention_detect import detect_mentions
+
+    par = spark.sparkContext.defaultParallelism
+    _sink(detect_mentions(c.limit(4 * par), num_partitions=par))
 
 
 def _run_scoring(spark, sf_dir: str, rep: int) -> tuple[float, int]:
-    """Throughput of the compute-bound stage (battery scoring + decode) —
-    the stage that dominates at 100 TB.  ``rep`` replicates the corpus so
-    core-time dwarfs fixed job overhead at both parallelism levels (same
-    input, same rep at both levels -> same job)."""
+    """Throughput of the compute-bound stage (battery scoring + decode).
+    ``rep`` replicates the corpus so core-time dwarfs fixed job overhead
+    at both parallelism levels (same input, same rep at both levels ->
+    same job)."""
     from pyspark.sql import functions as F
 
     from ehr_ner_spark.corpus import corpus
@@ -157,20 +159,15 @@ def _run_scoring(spark, sf_dir: str, rep: int) -> tuple[float, int]:
     par = spark.sparkContext.defaultParallelism
     c = corpus(spark, sf_dir).select("doc_id", "repo", "content_sha", "content")
     # repartition the small corpus FIRST, replicate map-side after (the
-    # broadcast range join preserves partitioning) — on one box the shuffle
-    # disk is a serial resource, so shuffling rep x content would measure
-    # the disk, not the engine; on a real cluster shuffle scales with
-    # executors and the replication wouldn't exist at all
+    # broadcast cross join preserves partitioning): shuffling rep x content
+    # would measure the local disk, not the engine
     big = (
         c.repartition(4 * par, "doc_id")
         .crossJoin(F.broadcast(spark.range(rep).select(F.col("id").alias("rep_id"))))
         .drop("rep_id")
     )
     n_rows = big.count()
-    # warm-up: spawn/reuse the Python workers + ship the pyfiles zip once,
-    # so the timed region measures steady-state throughput (a cluster's
-    # executors are long-lived; per-job worker spawn is not the workload)
-    _sink(detect_mentions(c.limit(4 * par), num_partitions=par))
+    _warm_workers(spark, c)
     best = float("inf")
     for _ in range(2):  # min-of-2: shields against machine noise
         t0 = time.time()
@@ -179,225 +176,44 @@ def _run_scoring(spark, sf_dir: str, rep: int) -> tuple[float, int]:
     return best, n_rows
 
 
-def _run_flagship(spark, sf_dir: str) -> float:
+def _run_pipeline(spark, sf_dir: str) -> float:
+    """Wall time of one real ``run_pipeline`` on a fresh table root."""
     from ehr_ner_spark.corpus import corpus
-    from ehr_ner_spark.operators.linking import canonical_triples, canonicalize
-    from ehr_ner_spark.operators.mention_detect import detect_mentions
+    from ehr_ner_spark.pipeline import run_pipeline
 
-    par = spark.sparkContext.defaultParallelism
-    c = corpus(spark, sf_dir)
-    # warm-up: spawn/reuse the Python workers + ship the pyfiles zip once
-    # (same rationale as _run_scoring: executors are long-lived on a real
-    # cluster — per-job worker spawn is not the 100-TB workload)
-    _sink(detect_mentions(c.limit(4 * par), num_partitions=par))
-    t0 = time.time()
-    m = detect_mentions(c, num_partitions=4 * par)
-    m = m.persist()
-    canon = canonicalize(m)
-    _sink(canonical_triples(m, canon))
-    dt = time.time() - t0
-    m.unpersist()
-    from ehr_ner_spark.cache import release_all
-
-    release_all()
-    return dt
-
-
-def _run_pipeline(spark, sf_dir: str, rep: int) -> tuple[float, int]:
-    """End-to-end flagship job (detect -> link -> canonicalize -> triples)
-    for the N vs 4N pair.  The north rule's criterion is the SAME JOB at
-    two cluster sizes — this times the WHOLE pipeline, shuffles and all,
-    not just the compute-bound scoring stage.  The corpus is replicated
-    ``rep`` x under DISTINCT doc ids (map-side broadcast cross join — no
-    shuffle of the inflated content), and each replica's mention surfaces
-    are salted before linking: without a salt every replica yields the
-    SAME 891 distinct surfaces, so the linking stage's workload would stay
-    constant while the corpus grows rep x — a measurement artifact real
-    data doesn't have (at 100 TB the surface universe grows with the
-    corpus).  The salt must also NOT cross-link replicas: a short suffix
-    ("§<rep>") leaves cross-replica Jaccard near 1.0, welding every
-    surface into a rep-sized clique (edges quadratic in rep — the opposite
-    artifact), and a salt shared within a replica (keyed on rep alone)
-    floods the LSH bands with same-salt candidate pairs.  So: 80% of
-    surfaces are REPLACED by a length-proportional md5-derived string
-    keyed on (text, rep) — novel vocabulary with genuinely disjoint
-    shingles — and 20% stay unsalted, modeling the shared vocabulary that
-    recurs corpus-wide (hot surfaces collapse in the groupBy; the base
-    near-dup alias graph lives here and still links).  REPLACEMENT, not
-    an appended suffix: ``text + salt`` keeps the original text as a
-    shared PREFIX across a base surface's ~0.8*rep variants, leaving
-    cross-variant Jaccard ~1/3 — which r=2 LSH bands catch with p ~0.85,
-    so every variant family became a near-clique of spurious candidates
-    (~1.5M pairs at rep=64, growing QUADRATICALLY in rep, all discarded
-    by the verify join).  Profiled 2026-08-21: that artifact was the
-    whole-pipeline 4->16 Amdahl tail.  Result: surface universe,
-    signatures, banding, verification, and triples all grow linearly
-    with rep, like real data."""
-    from pyspark.sql import functions as F
-
-    from ehr_ner_spark.cache import release_all
-    from ehr_ner_spark.corpus import corpus
-    from ehr_ner_spark.operators.linking import canonical_triples, canonicalize
-    from ehr_ner_spark.operators.mention_detect import detect_mentions
-
-    par = spark.sparkContext.defaultParallelism
-    c = corpus(spark, sf_dir)
-    n_base = c.count()
-
-    def once(rep_n: int) -> float:
-        big = (
-            c.repartition(4 * par, "doc_id")
-            .crossJoin(
-                F.broadcast(spark.range(rep_n).select(F.col("id").alias("rep")))
-            )
-            .withColumn(
-                "doc_id", F.col("doc_id") + F.col("rep") * F.lit(100_000_000)
-            )
-            .drop("rep")
-        )
+    _warm_workers(spark, corpus(spark, sf_dir))
+    with tempfile.TemporaryDirectory(prefix="bench-kg-") as root:
         t0 = time.time()
-        m = (
-            detect_mentions(big, num_partitions=0)
-            .withColumn(
-                "_rep", (F.col("doc_id") / F.lit(100_000_000)).cast("long")
-            )
-            .withColumn(
-                "text",
-                F.when(F.abs(F.hash("text")) % 5 == 0, F.col("text")).otherwise(
-                    # full REPLACEMENT by an md5-derived string of the SAME
-                    # length (repeat() extends past 32 hex chars): no shared
-                    # prefix with the base text or with sibling variants, so
-                    # shingle sets are disjoint and LSH emits no spurious
-                    # same-family candidates (see the docstring's artifact
-                    # note); same length keeps shingle counts, signature
-                    # cost, and byte mass identical to the corpus it models
-                    F.expr(
-                        "substr(repeat(md5(concat(text,"
-                        " cast(_rep as string))),"
-                        " 1 + length(text) DIV 32), 1, length(text))"
-                    )
-                ),
-            )
-            .drop("_rep")
-            .persist()
-        )
-        canon = canonicalize(m)
-        _sink(canonical_triples(m, canon))
-        dt = time.time() - t0
-        m.unpersist()
-        release_all()
-        return dt
-
-    # warm pass at rep=2: spawns the Python workers, ships the pyfiles zip,
-    # and compiles/codegens every plan in the chain ONCE — a cluster running
-    # this as a recurring job amortizes all of that, and the one-time cost
-    # is identical at both parallelism levels (driver-side), so leaving it
-    # in the timed region would only add a fixed term to both sides of the
-    # ratio and misreport steady-state scaling (cold-start is reported
-    # separately in BENCH/BASELINE.md)
-    once(2)
-    # min-of-N timed runs, same estimator as _run_scoring: per-stage
-    # profiling shows the detect stage is stable (±1%) but the link tail's
-    # seconds-scale shuffle stages swing 3-4x with JIT/GC state and
-    # transient host load — the min is the noise-robust estimator of the
-    # plan's cost, and the warm-JVM regime it selects is the steady-state a
-    # long-lived cluster executor actually runs in.  N defaults to 3: the
-    # session-13 quiet run showed min-of-2 still lands mid-swing at
-    # local[16] (tries 0.693/0.685/0.34 with one 94-150 s swing per pair),
-    # and one extra rep per level is cheaper than burning a whole try.
-    n_min = int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_MIN_OF", "3"))
-    return min(once(rep) for _ in range(n_min)), n_base * rep
+        run_pipeline(spark, sf_dir, root)
+        return time.time() - t0
 
 
-def _pipeline_child_run(cores: int, rep: int) -> tuple[float, int]:
-    import subprocess
-
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--pipeline-child",
-         str(cores), str(rep)],
-        capture_output=True, text=True, check=True,
-    )
-    line = proc.stdout.strip().splitlines()[-1]
-    d = json.loads(line)
-    return d["sec"], d["n_rows"]
-
-
-def _pipeline_child(cores: int, rep: int) -> None:
-    spark = _session(cores)
-    sec, n_rows = _run_pipeline(spark, SF_DIR, rep)
-    spark.stop()
-    print(json.dumps({"sec": sec, "n_rows": n_rows}))
-
-
-def _hw_calibration(lo: int = 8, hi: int = 32, n_iter: int = 1500) -> dict:
-    """Raw multiprocessing scaling of THIS box on a numpy+crc mix that
-    mirrors the scorer kernel — the ceiling any engine can reach here.
-    The sandbox VM's all-core throughput fluctuates (shared host), so each
-    bench run carries its own calibration; spark_eff/hw_eff isolates the
-    engine's overhead from the machine's."""
-    import multiprocessing as mp
-
-    def run(procs: int) -> float:
-        t0 = time.time()
-        with mp.Pool(procs) as p:
-            p.map(_hw_work, [n_iter] * procs)
-        return procs * n_iter / (time.time() - t0)
-
-    r_lo, r_hi = run(lo), run(hi)
-    return {
-        "lo_procs": lo, "hi_procs": hi,
-        "lo_ops_per_sec": round(r_lo, 1),
-        "hi_ops_per_sec": round(r_hi, 1),
-        "hw_efficiency": round((r_hi / r_lo) / (hi / lo), 3),
-    }
-
-
-def _hw_work(n_iter: int) -> int:
-    # md5 + numpy modular mix mirroring the scorer kernel's actual work
-    import hashlib
-
-    import numpy as np
-
-    h = 0
-    a = np.arange(20000, dtype=np.int64)
-    for i in range(n_iter):
-        h ^= int(hashlib.md5(str(i).encode() * 20).hexdigest()[:15], 16)
-        _ = ((a * 1103515245 + 12345) % 997).sum()
-    return h
-
-
-def _scaling_child_run(cores: int, rep: int) -> tuple[float, int]:
-    import subprocess
-
+def _scaling_child_run(cores: int) -> tuple[float, int]:
+    """Run ``_run_scoring`` at ``local[cores]`` in a child process: one
+    JVM per measurement (a stopped SparkContext leaves GC/daemon residue
+    that pollutes the next session's timing in-process)."""
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--scaling-child",
-         str(cores), str(rep)],
+         str(cores)],
         capture_output=True, text=True, check=True,
     )
-    line = proc.stdout.strip().splitlines()[-1]
-    d = json.loads(line)
+    d = json.loads(proc.stdout.strip().splitlines()[-1])
     return d["sec"], d["n_rows"]
 
 
-def _scaling_child(cores: int, rep: int) -> None:
-    spark = _session(cores)
-    sec, n_rows = _run_scoring(spark, SF_DIR, rep)
+def _scaling_child(cores: int) -> None:
+    from ehr_ner_spark.session import get_spark
+
+    spark = get_spark(app_name=f"bench-{cores}", master=f"local[{cores}]")
+    sec, n_rows = _run_scoring(spark, SF_DIR, SCALING_REP)
     spark.stop()
     print(json.dumps({"sec": sec, "n_rows": n_rows}))
-
-
-def _median(xs):
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
 def _emit(out: dict, final: bool = False) -> None:
-    """Print the full accumulated result as one JSON line (newest line
-    supersedes older ones) and mirror it to a partial file.  Called after
-    every phase and every scaling try: an external timeout mid-run leaves
-    the last line as a complete, parseable artifact of everything
-    measured so far (round 4's rc=124 left nothing)."""
+    """Print the full accumulated result as one JSON line and mirror it
+    atomically to the partial file; a failed file write never loses the
+    stdout line, which is the artifact of record."""
     out["partial"] = not final
     line = json.dumps(out)
     print(line, flush=True)
@@ -411,27 +227,32 @@ def _emit(out: dict, final: bool = False) -> None:
             f.write(line)
         os.replace(path + ".tmp", path)
     except OSError:
-        pass  # the stdout line is the artifact of record
+        pass
 
 
-def main() -> None:
-    from ehr_ner_spark import entrypoints
-    from ehr_ner_spark.cache import release_all
+def _phase_list(arg: str) -> set[str]:
+    phases = {p.strip() for p in arg.split(",") if p.strip()}
+    unknown = phases - set(PHASES)
+    if unknown:
+        raise argparse.ArgumentTypeError(
+            f"unknown phase(s) {sorted(unknown)}; choose from {PHASES}")
+    return phases
 
-    phases_arg = "headline,north,sat,pipe,extended"
-    if "--phases" in sys.argv:
-        phases_arg = sys.argv[sys.argv.index("--phases") + 1]
-    phases = {p.strip() for p in phases_arg.split(",") if p.strip()}
 
-    n_docs = None
-    timings: dict[str, float] = {}
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--phases", type=_phase_list, default=set(PHASES),
+                    help="comma-separated subset of " + ",".join(PHASES))
+    ap.add_argument("--scaling-child", type=int, metavar="CORES",
+                    help=argparse.SUPPRESS)
+    args = ap.parse_args(argv)
+    if args.scaling_child:
+        _scaling_child(args.scaling_child)
+        return
+    phases = args.phases
 
-    # wall-clock budget: the driver runs this harness under its own timeout,
-    # and a lost artifact is strictly worse than a shorter try list.  r4's
-    # 3300 default overran (4052 s / 3342 s elapsed locally; the driver's
-    # harder timeout killed the run mid-phase) — 2700 leaves real headroom
-    # under a 3600 s external window.  Budget pressure drops reps, then
-    # phases, never the emit.  0 disables.
+    from ehr_ner_spark.session import default_cpus
+
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700"))
     if budget <= 0:
         budget = float("inf")
@@ -440,13 +261,7 @@ def main() -> None:
     def left() -> float:
         return budget - (time.time() - t0_all)
 
-    # min-of-N per query: single-shot timings on a shared host made r2
-    # regressions unarguable-but-undiagnosable; the min is the noise-robust
-    # estimator of the plan's cost.  Tracked caches are released between
-    # repetitions so every rep pays the full plan (no warm-cache minima)
-    # and persisted frames never accumulate across the query session.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_REPS", "3"))
-
+    timings: dict[str, float] = {}
     out: dict = {
         "metric": "kg_pipeline+headline_queries wall-clock",
         "value": 0.0,
@@ -459,390 +274,89 @@ def main() -> None:
         "queries_skipped": [],
     }
 
-    def refresh() -> None:
+    def emit(final: bool = False) -> None:
         out["value"] = round(sum(timings.values()), 3)
         out["bench_elapsed_sec"] = round(time.time() - t0_all, 1)
+        _emit(out, final)
 
-    spark = None
-    if "headline" in phases or "extended" in phases:
-        spark = _session(CPUS)
-        n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-        out["n_docs"] = n_docs
+    def session():
+        from ehr_ner_spark.session import get_spark
 
-    if "headline" in phases:
-        # flagship KG pipeline (throughput metric), min-of-2
-        flagship_sec = min(_run_flagship(spark, SF_DIR) for _ in range(2))
-        timings["kg_pipeline"] = round(flagship_sec, 3)
-        out["docs_per_sec"] = round(n_docs / flagship_sec, 2)
-        refresh()
-        _emit(out)
-        for name in CORE_QUERIES:
+        spark = get_spark(app_name="bench")
+        if out["n_docs"] is None:
+            out["n_docs"] = spark.read.parquet(
+                f"{SF_DIR}/documents.parquet").count()
+        return spark
+
+    def time_queries(spark, names: list[str], reps: int) -> None:
+        from ehr_ner_spark import entrypoints
+        from ehr_ner_spark.cache import release_all
+
+        for name in names:
+            if left() < 60:
+                out["queries_skipped"] += [q for q in names if q not in timings]
+                break
             fn = entrypoints.QUERIES_REGISTRY[name]
             best = float("inf")
             for i in range(reps):
-                # CORE queries are cheap (~1-2 s each); extra reps yield
-                # only under a tiny budget — the scaling pairs behind this
-                # phase need the clock far more
+                # extra reps only while the budget is young: the phases
+                # behind this one need the clock more
                 if i and time.time() - t0_all > 0.20 * budget:
                     break
                 t0 = time.time()
                 _sink(fn(spark, SF_DIR))
                 best = min(best, time.time() - t0)
+                # tracked caches released between reps: every rep pays the
+                # full plan and persisted frames never accumulate
                 release_all()
             timings[name] = round(best, 3)
-            refresh()
-            _emit(out)
+            emit()
 
-    # ---- scaling phases (the BASELINE gate) run BEFORE the EXTENDED
-    # coverage queries: a budget- or externally-truncated run must carry
-    # the scaling evidence, not 40 min-of-1 coverage timings.  The Spark
-    # session is stopped around them (each pair runs its own child JVMs).
-    if spark is not None and ("north" in phases or "sat" in phases
-                              or "pipe" in phases):
+    if "headline" in phases:
+        spark = session()
+        sec = _run_pipeline(spark, SF_DIR)
+        timings["kg_pipeline"] = round(sec, 3)
+        out["docs_per_sec"] = round(out["n_docs"] / sec, 2)
+        emit()
+        time_queries(spark, CORE_QUERIES, QUERY_REPS)
         spark.stop()
-        spark = None
 
-    scaling: dict = {}
-    want_scaling = DO_SCALING and ("north" in phases or "sat" in phases
-                                   or "pipe" in phases)
-    if want_scaling:
-        out["scaling"] = scaling
-        rep = int(os.environ.get("SPARK_GRAFT_BENCH_REP", "96"))
-        quiet_hw = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_HW", "0.85"))
-        # phase deadline shares, renormalized over the requested phases and
-        # re-based on the clock actually remaining as each phase starts —
-        # a phase finishing early donates its slack downstream
-        weights = {"north": 20.0, "sat": 35.0, "pipe": 45.0}
-        active = [p for p in ("north", "sat", "pipe") if p in phases]
-
-        def phase_deadline(p: str) -> float:
-            rem = [q for q in active if active.index(q) >= active.index(p)]
-            share = weights[p] / sum(weights[q] for q in rem)
-            if left() == float("inf"):
-                return float("inf")
-            return time.time() + share * max(0.0, left())
-
-    if want_scaling and "north" in phases:
-        # NORTH-RULE pair: N=4 -> 4N=16 executor threads (half the 32-core
-        # box at the high level, so the measurement is not confounded by
-        # the shared host's all-core contention).  rep sized so scoring
-        # core-time dwarfs session fixed costs at both levels.
-        tries = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_TRIES", "3"))
-        north_deadline = phase_deadline("north")
-        est_try = 220.0  # measured r4: ~65 s @4 + ~18 s @16 + 2 sessions
-        best, all_tries, north_skipped, north_windows = None, [], 0, 0
-
-        def north_summary() -> None:
-            scaling.update({
-                "tries": all_tries,
-                "windows_skipped_noisy": north_skipped,
-            })
-            if best is not None:
-                scaling.update({
-                    "stage": "battery scoring + IOB2 decode (mapInPandas)",
-                    "rep": rep,
-                    "n_docs_scored": best["n_rows"],
-                    "local4_sec": round(best["t4"], 3),
-                    "local16_sec": round(best["t16"], 3),
-                    "local4_docs_per_sec": round(
-                        best["n_rows"] / best["t4"], 1),
-                    "local16_docs_per_sec": round(
-                        best["n_rows"] / best["t16"], 1),
-                    # headline = best try; the shared host makes the
-                    # distribution's max (the quiet window) the estimate of
-                    # the engine's scaling, and the label + median + raw
-                    # tries keep the reporting honest
-                    "efficiency": round(best["eff"], 3),
-                    "efficiency_policy":
-                        "best_of_tries (quiet-window sampling)",
-                    "median_efficiency": round(_median(
-                        [t["efficiency"] for t in all_tries
-                         if "efficiency" in t]), 3),
-                    "hw_calibration": best["hw"],
-                    "efficiency_vs_hw": round(
-                        best["eff"] / best["hw"]["hw_efficiency"], 3),
-                })
-            refresh()
-            _emit(out)
-
-        while left() > est_try:
-            north_windows += 1
-            north_hw = _hw_calibration(4, 16)
-            north_exhausted = (north_windows >= 4 * tries
-                               or time.time() > north_deadline - est_try)
-            if north_hw["hw_efficiency"] < quiet_hw and not north_exhausted:
-                north_skipped += 1
-                time.sleep(10)
-                continue
-            # each level runs in its own subprocess: one JVM per measurement
-            # (a stopped SparkContext leaves GC/daemon residue that pollutes
-            # the next session's timing in-process); a failed child must not
-            # kill the bench — every number already measured stays reportable
-            try:
-                t4, n_rows = _scaling_child_run(4, rep)
-                t16, _ = _scaling_child_run(16, rep)
-            except Exception as e:  # noqa: BLE001 — artifact > crash
-                all_tries.append({"error": repr(e)[:200]})
-                north_summary()
-                if len(all_tries) >= tries:
-                    break
-                continue
-            eff = (t4 / t16) / 4.0
-            all_tries.append({
-                "local4_sec": round(t4, 3),
-                "local16_sec": round(t16, 3),
-                "efficiency": round(eff, 3),
-                "hw_efficiency": north_hw["hw_efficiency"],
-            })
-            if best is None or eff > best["eff"]:
-                best = {"t4": t4, "t16": t16, "eff": eff, "n_rows": n_rows,
-                        "hw": north_hw}
-            north_summary()
-            if (eff >= 0.8 or len(all_tries) >= tries
-                    or time.time() > north_deadline - est_try):
-                break
-        if not all_tries:
-            out["phases_skipped"].append("north (budget)")
-            north_summary()
-
-    if want_scaling and "sat" in phases:
-        # SATURATION pair: 8 -> 32 fills the whole box; reported with a raw
-        # multiprocessing calibration of the SAME window so engine overhead
-        # is separable from the machine's own all-core ceiling.  The
-        # all-core hw probe is a WEAK predictor for this pair (r3 records
-        # landed green in windows whose probe read 0.54-0.57), so waiting
-        # is capped and the phase spends its clock on timed tries.
-        # rep: 4x the north pair's.  Profiled r5: local[8] is rock-stable
-        # (~54 s at 2x) while local[32] carries ~4-5 s of fixed stage/JIT
-        # tail on top of the ideal quarter — at 2x rep that tail alone
-        # caps observable efficiency near 0.75 on a QUIET box.  The 100-TB
-        # design point runs minutes-long stages where that constant
-        # vanishes; doubling the measured batch halves its share (the same
-        # amortization the whole-job pair's rep=256 applies), costing ~90 s
-        # more per try.
-        rep32 = int(os.environ.get("SPARK_GRAFT_BENCH_SAT_REP", str(4 * rep)))
-        sat_tries = int(os.environ.get("SPARK_GRAFT_BENCH_SAT_TRIES", "8"))
-        sat_sleeps = int(os.environ.get("SPARK_GRAFT_BENCH_SAT_SLEEPS", "12"))
-        sat_deadline = phase_deadline("sat")
-        est_try = 200.0  # measured r4: ~60 s @8 + ~25 s @32 + 2 sessions
-        sat_best, sat_all, sat_skipped, windows = None, [], 0, 0
-
-        def sat_summary() -> None:
-            scaling["saturation_8_to_32"] = {
-                **({
-                    "rep": rep32,
-                    "n_docs_scored": sat_best["n32"],
-                    "local8_sec": round(sat_best["t8"], 3),
-                    "local32_sec": round(sat_best["t32"], 3),
-                    "local32_docs_per_sec": round(
-                        sat_best["n32"] / sat_best["t32"], 1),
-                    "efficiency": round(sat_best["eff"], 3),
-                    "efficiency_policy":
-                        "best_of_tries (quiet-window sampling)",
-                    "median_efficiency": round(_median(
-                        [t["efficiency"] for t in sat_all
-                         if "efficiency" in t]), 3),
-                    "hw_calibration": sat_best["hw"],
-                    "efficiency_vs_hw": round(
-                        sat_best["eff"] / sat_best["hw"]["hw_efficiency"], 3),
-                } if sat_best is not None else {}),
-                "tries": sat_all,
-                "windows_skipped_noisy": sat_skipped,
+    if "scaling" in phases:
+        if left() < SCALING_EST_SEC:
+            out["phases_skipped"].append("scaling (budget)")
+        else:
+            n_lo = max(1, int(default_cpus()) // 4)
+            n_hi = 4 * n_lo
+            scaling = out["scaling"] = {
+                "stage": "battery scoring + IOB2 decode (mapInPandas)",
+                "rep": SCALING_REP,
+                "n_lo": n_lo,
+                "n_hi": n_hi,
+                "bound": SCALING_BOUND,
             }
-            refresh()
-            _emit(out)
-
-        while left() > est_try:
-            windows += 1
-            hw = _hw_calibration()
-            exhausted = (sat_skipped >= sat_sleeps
-                         or time.time() > sat_deadline - est_try)
-            if hw["hw_efficiency"] < quiet_hw and not exhausted:
-                sat_skipped += 1
-                time.sleep(10)
-                continue
-            # a failed child (OOM at rep32 on a loaded host) must not kill
-            # the bench — every number already measured stays reportable
+            # a failed child must not kill the bench: everything measured
+            # so far stays reportable
             try:
-                t8, n32 = _scaling_child_run(8, rep32)
-                t32, _ = _scaling_child_run(32, rep32)
-            except Exception as e:  # noqa: BLE001 — artifact > crash
-                sat_all.append({"error": repr(e)[:200]})
-                sat_summary()
-                if len(sat_all) >= sat_tries:
-                    break
-                continue
-            eff32 = (t8 / t32) / 4.0
-            sat_all.append({
-                "local8_sec": round(t8, 3),
-                "local32_sec": round(t32, 3),
-                "efficiency": round(eff32, 3),
-                "hw_efficiency": hw["hw_efficiency"],
-            })
-            if sat_best is None or eff32 > sat_best["eff"]:
-                sat_best = {"t8": t8, "t32": t32, "eff": eff32,
-                            "n32": n32, "hw": hw}
-            sat_summary()
-            if (eff32 >= 0.8 or len(sat_all) >= sat_tries
-                    or time.time() > sat_deadline - est_try):
-                break
-        if not sat_all:
-            out["phases_skipped"].append("sat (budget)")
-            sat_summary()
-
-    if want_scaling and "pipe" in phases:
-        # WHOLE-JOB pair: the north rule says "the same job at N and 4N
-        # executors" — so also measure the full flagship pipeline (detect ->
-        # link -> canonicalize -> triples), not just its compute-bound
-        # stage.  rep inflates the corpus under distinct doc ids so the
-        # scalable work dwarfs the pipeline's fixed per-job latency (r4:
-        # rep=256 halves the fixed share vs r3's 128).  This is the most
-        # expensive pair (~200 s per local[4] timed run), so the in-child
-        # min-of count adapts to the remaining clock: reps drop before the
-        # phase does, and the phase drops only when even a min-of-1 try
-        # cannot finish — recorded either way.
-        pipe_rep = int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_REP", "256"))
-        pipe_tries = int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_TRIES", "3"))
-        pipe_deadline_t = phase_deadline("pipe")
-        pipe_best, pipe_all, pipe_skipped, pipe_windows = None, [], 0, 0
-
-        def pipe_try_cost(min_of: int) -> float:
-            # measured r4 @ rep=256: ~200 s per local[4] run, ~85 s per
-            # local[16] run, ~100 s of session+warm overhead per level
-            return 200.0 + min_of * 285.0
-
-        def pipe_summary() -> None:
-            scaling["pipeline_4_to_16"] = {
-                **({
-                    "stage": "whole flagship job: detect -> link -> "
-                             "canonicalize -> triples",
-                    "rep": pipe_rep,
-                    "n_docs": pipe_best["n_docs"],
-                    "local4_sec": round(pipe_best["t4"], 3),
-                    "local16_sec": round(pipe_best["t16"], 3),
-                    "local4_docs_per_sec": round(
-                        pipe_best["n_docs"] / pipe_best["t4"], 1),
-                    "local16_docs_per_sec": round(
-                        pipe_best["n_docs"] / pipe_best["t16"], 1),
-                    "efficiency": round(pipe_best["eff"], 3),
-                    "efficiency_policy":
-                        "best_of_tries (quiet-window sampling)",
-                    "median_efficiency": round(_median(
-                        [t["efficiency"] for t in pipe_all
-                         if "efficiency" in t]), 3),
-                    "hw_calibration": pipe_best["hw"],
-                    "efficiency_vs_hw": round(
-                        pipe_best["eff"]
-                        / pipe_best["hw"]["hw_efficiency"], 3),
-                    # the job occupies ~2N threads at local[N] (JVM task
-                    # threads + Python workers): 8->32 procs is the
-                    # faithful hardware ceiling for this pair
-                    "hw_calibration_threads_8_32": pipe_best["hw_threads"],
-                    "efficiency_vs_hw_threads": round(
-                        pipe_best["eff"]
-                        / pipe_best["hw_threads"]["hw_efficiency"], 3),
-                } if pipe_best is not None else {}),
-                "tries": pipe_all,
-                "windows_skipped_noisy": pipe_skipped,
-            }
-            refresh()
-            _emit(out)
-
-        env_min_of = os.environ.get("SPARK_GRAFT_BENCH_PIPE_MIN_OF")
-        while True:
-            avail = min(left(), pipe_deadline_t - time.time())
-            if env_min_of is not None:
-                min_of = int(env_min_of)
-            elif avail > pipe_try_cost(2):
-                min_of = 2
+                t_lo, n_rows = _scaling_child_run(n_lo)
+                t_hi, _ = _scaling_child_run(n_hi)
+            except (subprocess.CalledProcessError, ValueError, IndexError) as e:
+                scaling["error"] = repr(e)[:200]
             else:
-                min_of = 1
-            if avail < pipe_try_cost(min_of) and pipe_all:
-                break  # no clock for another try; keep what's measured
-            if avail < pipe_try_cost(1) and not pipe_all:
-                out["phases_skipped"].append("pipe (budget)")
-                pipe_summary()
-                break
-            pipe_windows += 1
-            pipe_hw = _hw_calibration(4, 16)
-            # second calibration at 8->32 PROCESSES: the Spark job at
-            # local[N] runs ~2N busy threads (N JVM task threads + N
-            # Python scorer workers), so the pipe pair's true thread
-            # occupancy is ~8 vs ~32 — the 4->16 probe OVERSTATES the
-            # hardware ceiling this pair actually faces on a 32-vCPU
-            # box.  Both calibrations are recorded; vs_hw_threads is the
-            # faithful normalization.
-            pipe_hw_threads = _hw_calibration(8, 32)
-            pipe_exhausted = (
-                pipe_windows >= 4 * pipe_tries
-                or time.time() > pipe_deadline_t - pipe_try_cost(min_of))
-            if pipe_hw["hw_efficiency"] < quiet_hw and not pipe_exhausted:
-                pipe_skipped += 1
-                time.sleep(10)
-                continue
-            # reps drop before phases: the child reads the min-of count
-            # from the environment at spawn time
-            os.environ["SPARK_GRAFT_BENCH_PIPE_MIN_OF"] = str(min_of)
-            try:
-                p4, pipe_docs = _pipeline_child_run(4, pipe_rep)
-                p16, _ = _pipeline_child_run(16, pipe_rep)
-            except Exception as e:  # noqa: BLE001 — artifact > crash
-                pipe_all.append({"error": repr(e)[:200]})
-                pipe_summary()
-                if len(pipe_all) >= pipe_tries:
-                    break
-                continue
-            peff = (p4 / p16) / 4.0
-            pipe_all.append({
-                "local4_sec": round(p4, 3),
-                "local16_sec": round(p16, 3),
-                "efficiency": round(peff, 3),
-                "min_of": min_of,
-                "hw_efficiency": pipe_hw["hw_efficiency"],
-                "hw_efficiency_threads_8_32":
-                    pipe_hw_threads["hw_efficiency"],
-            })
-            if pipe_best is None or peff > pipe_best["eff"]:
-                pipe_best = {"t4": p4, "t16": p16, "eff": peff,
-                             "n_docs": pipe_docs, "hw": pipe_hw,
-                             "hw_threads": pipe_hw_threads}
-            pipe_summary()
-            if peff >= 0.8 or len(pipe_all) >= pipe_tries:
-                break
+                scaling.update({
+                    "n_docs_scored": n_rows,
+                    f"local{n_lo}_sec": round(t_lo, 3),
+                    f"local{n_hi}_sec": round(t_hi, 3),
+                    "efficiency": round((t_lo / t_hi) / 4.0, 3),
+                })
+        emit()
 
-    # ---- EXTENDED coverage queries LAST: min-of-1 each, dropped (and
-    # recorded as skipped) when the clock runs out — they are coverage,
-    # not the BASELINE gate.
     if "extended" in phases:
-        if spark is None:
-            spark = _session(CPUS)
-            if out["n_docs"] is None:
-                out["n_docs"] = spark.read.parquet(
-                    f"{SF_DIR}/documents.parquet").count()
-        for name in EXTENDED_QUERIES:
-            if left() < 60:
-                out["queries_skipped"] = [
-                    q for q in EXTENDED_QUERIES if q not in timings
-                ]
-                break
-            fn = entrypoints.QUERIES_REGISTRY[name]
-            t0 = time.time()
-            _sink(fn(spark, SF_DIR))
-            timings[name] = round(time.time() - t0, 3)
-            release_all()
-            refresh()
-            _emit(out)
-    if spark is not None:
+        spark = session()
+        time_queries(spark, EXTENDED_QUERIES, 1)
         spark.stop()
 
-    refresh()
-    _emit(out, final=True)
+    emit(final=True)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-child":
-        _scaling_child(int(sys.argv[2]), int(sys.argv[3]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--pipeline-child":
-        _pipeline_child(int(sys.argv[2]), int(sys.argv[3]))
-    else:
-        main()
+    main()

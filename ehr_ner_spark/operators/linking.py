@@ -260,9 +260,8 @@ def skew_guard_stats(mentions: DataFrame, k: int = SKEW_GUARD_K) -> DataFrame:
         mentions.crossJoin(
             F.broadcast(spark.range(k).select(F.col("id").alias("rep")))
         )
-        .withColumn(
-            "doc_id", F.col("doc_id") + F.col("rep") * F.lit(100_000_000)
-        )
+        # doc_id * k + rep: distinct for every non-negative doc_id
+        .withColumn("doc_id", F.col("doc_id") * F.lit(k) + F.col("rep"))
         .drop("rep")
     )
     # sigs feeds five consumers (bucket stats, pairs, verify, CC, surface

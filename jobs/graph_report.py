@@ -41,8 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/kg_graph_report"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-
     from ehr_ner_spark.corpus import corpus
     from ehr_ner_spark.operators.communities import (
         entity_components,
@@ -60,8 +58,9 @@ def main() -> None:
     )
     from ehr_ner_spark.operators.pagerank import pagerank
     from ehr_ner_spark.operators.paths import stress_centrality
-    from ehr_ner_spark.session import get_spark
+    from ehr_ner_spark.session import default_cpus, get_spark
 
+    cpus = int(default_cpus())
     spark = get_spark(
         app_name="kg-graph-report",
         master=f"local[{cpus}]",

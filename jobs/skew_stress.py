@@ -34,8 +34,6 @@ from pyspark.sql import functions as F  # noqa: E402
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from ehr_ner_spark.corpus import corpus
     from ehr_ner_spark.operators.linking import (
         PAIR_CAP,
@@ -48,8 +46,9 @@ def main() -> None:
         verified_edges,
     )
     from ehr_ner_spark.operators.mention_detect import detect_mentions
-    from ehr_ner_spark.session import get_spark
+    from ehr_ner_spark.session import default_cpus, get_spark
 
+    cpus = int(default_cpus())
     spark = get_spark(
         app_name=f"skew-stress-{k}x",
         master=f"local[{cpus}]",
@@ -76,9 +75,8 @@ def main() -> None:
         big = (
             c.repartition(4 * par, "doc_id")
             .withColumn("rep", F.explode(F.sequence(F.lit(0), reps - F.lit(1))))
-            .withColumn(
-                "doc_id", F.col("doc_id") + F.col("rep") * F.lit(100_000_000)
-            )
+            # rep < k, so doc_id * k + rep is distinct for every doc_id >= 0
+            .withColumn("doc_id", F.col("doc_id") * F.lit(k) + F.col("rep"))
             .drop("rep")
         )
         n_docs = big.count()
@@ -88,9 +86,8 @@ def main() -> None:
             .crossJoin(
                 F.broadcast(spark.range(k).select(F.col("id").alias("rep")))
             )
-            .withColumn(
-                "doc_id", F.col("doc_id") + F.col("rep") * F.lit(100_000_000)
-            )
+            # rep < k, so doc_id * k + rep is distinct for every doc_id >= 0
+            .withColumn("doc_id", F.col("doc_id") * F.lit(k) + F.col("rep"))
             .drop("rep")
         )
         n_docs = n_base * k

@@ -1,8 +1,8 @@
-"""The bench harness's incremental-emission contract (round-5 fix for
-the r4 lost-artifact failure): every _emit call prints ONE complete JSON
-line carrying everything measured so far and atomically mirrors it to
-the partial file, so an external kill at any point leaves the last line
-as a valid artifact."""
+"""The bench harness's command line, its scaling report, and its
+incremental-emission contract (the fix for the r4 lost-artifact failure):
+every _emit call prints ONE complete JSON line carrying everything
+measured so far and atomically mirrors it to the partial file, so an
+external kill at any point leaves the last line as a valid artifact."""
 
 from __future__ import annotations
 
@@ -44,9 +44,38 @@ def test_emit_file_failure_never_loses_the_stdout_line(tmp_path, monkeypatch):
     assert json.loads(captured.getvalue().strip())["value"] == 1
 
 
-def test_median_helper():
+def test_phases_without_value_is_a_usage_error(capsys):
+    import pytest
+
     import bench
 
-    assert bench._median([3.0]) == 3.0
-    assert bench._median([1.0, 9.0]) == 5.0
-    assert bench._median([1.0, 5.0, 9.0]) == 5.0
+    with pytest.raises(SystemExit) as e:
+        bench.main(["--phases"])
+    assert e.value.code == 2
+    assert "--phases" in capsys.readouterr().err
+
+
+def test_scaling_phase_reports_one_1_to_4_pair(tmp_path, monkeypatch):
+    import bench
+
+    t1, t4 = 36.0, 10.0
+    calls = []
+
+    def fake_child(cores):
+        calls.append(cores)
+        return {1: t1, 4: t4}[cores], 120_000
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PARTIAL", str(tmp_path / "p.json"))
+    monkeypatch.setattr(bench, "_scaling_child_run", fake_child)
+    captured = io.StringIO()
+    monkeypatch.setattr(sys, "stdout", captured)
+    bench.main(["--phases", "scaling"])
+
+    last = json.loads(captured.getvalue().strip().splitlines()[-1])
+    sc = last["scaling"]
+    assert calls == [1, 4]  # one try per level, no retries
+    assert (sc["n_lo"], sc["n_hi"]) == (1, 4)
+    assert sc["efficiency"] == (t1 / t4) / 4
+    assert sc["bound"] == 0.8
+    assert last["partial"] is False and last["phases_skipped"] == []
