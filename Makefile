@@ -1,7 +1,12 @@
-.PHONY: test bench dist clean
+.PHONY: test perfbench-test bench dist clean
 
+# the Tier-1 command of ROADMAP.md
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+perfbench-test:
+	python3 -m pytest perfbench/tests -q -p no:cacheprovider
 
 bench:
 	python bench.py

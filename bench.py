@@ -325,7 +325,7 @@ def main(argv: list[str] | None = None) -> None:
         if left() < SCALING_EST_SEC:
             out["phases_skipped"].append("scaling (budget)")
         else:
-            n_lo = max(1, int(default_cpus()) // 4)
+            n_lo = max(1, default_cpus() // 4)
             n_hi = 4 * n_lo
             scaling = out["scaling"] = {
                 "stage": "battery scoring + IOB2 decode (mapInPandas)",

@@ -1,40 +1,37 @@
-"""Entity linking + LSH canonicalization (north-rule stages on top of the
-reference's mention stream).
+"""Entity linking: mentions -> (text, canonical_text, component, n_mentions).
 
-Reference analogs (SURVEY.md §2.10): exact-dup merge = D1
-(dataAugmentator.py:59-69); cross-source conflict resolution = D4; canonical
-naming = the demo's code->name projection (demo/app.py:86-92).  The
-similarity machinery itself is new design, built Spark-first:
+Each surface form (distinct mention text) is linked to its near-duplicates:
 
-  mentions
-    -> distinct surface forms + frequency            (groupBy, map-side combine)
-    -> char 3-gram shingles -> MinHash signatures    (Arrow-batched pandas UDF;
-                                                      k=32 universal hashes over
-                                                      crc32(shingle))
-    -> LSH bands (b=8, r=4) -> posexplode            (band bucket key)
-    -> per-bucket candidate pairs                    (groupBy band key;
-                                                      **skew-safe**: buckets up
-                                                      to PAIR_CAP emit all
-                                                      pairs, oversized buckets
-                                                      emit a sorted chain of
-                                                      consecutive pairs — O(n)
-                                                      edges that preserve
-                                                      connectivity for the
-                                                      connected-components pass,
-                                                      instead of O(n^2) pair
-                                                      blow-up on head surfaces)
-    -> Jaccard verification join (>= threshold)      (array_intersect/union on
-                                                      exact shingle sets)
-    -> connected components                          (iterative min-component
-                                                      propagation, bounded)
-    -> canonical election                            (max mention count, then
-                                                      lexicographically min
-                                                      surface — total order, so
-                                                      partition-order
-                                                      independent)
+  1. surface id: md5-60 of the text (``hashing.md5_60``): stable across
+     runs and cluster sizes, and SQL-computable for the DuckDB twins;
+  2. shingles: the distinct character 3-grams (NUL-padded below 3
+     chars), each hashed with md5-60;
+  3. MinHash: K=32 permutations (a*x + b) mod 2^31-1 of the shingle
+     hashes (``universal_coeffs("lh", i)``), min per permutation;
+  4. LSH: 16 bands of 2 minhashes, each packed into one BIGINT key;
+  5. candidates: every id-ordered pair of a (band, key) bucket of at most
+     PAIR_CAP members, only the chain of consecutive members in a larger
+     one (the skew guard); a small-bucket pair needs MIN_BAND_HITS
+     distinct bands, chain pairs are exempt;
+  6. verify: exact Jaccard of the shingle-hash sets >= the threshold;
+  7. components: each surface gets the min surface id of its component;
+  8. election: the canonical text is the member with the most mentions,
+     ties to the smaller text (a total order: partition-independent).
 
-Surface ids are md5-60bit of the surface text (stable across runs and cluster sizes —
-``monotonically_increasing_id`` would NOT be resume-safe).
+``canonicalize`` has two strategies with identical rows.  A bounded probe
+collects at most T + 1 rows of the (text, n_mentions) frame to the driver,
+T = ``ONE_PASS_MAX_SURFACES``:
+
+* **one pass** (at most T rows): the driver runs steps 1-8 in NumPy over
+  that frame (``_link_surfaces``): one hash per distinct shingle,
+  array-at-a-time pair emission and band-hit counting, min-label
+  propagation with pointer jumping; three Spark jobs in all;
+* **distributed** (above T): ``surface_signatures`` (an Arrow UDF over
+  the same ``_minhash`` kernel) -> ``candidate_pairs`` ->
+  ``verified_edges`` -> ``connected_components`` -> a window election,
+  about twenty Spark jobs.  It is the only path for inputs too large for
+  one process; its operators also back ``blocking_stats``,
+  ``band_filter_recall``, ``skew_guard_stats`` and ``dedup.py``.
 """
 
 from __future__ import annotations
@@ -46,7 +43,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 MINHASH_K = 32
 # b=16, r=2: S-curve midpoint (1/b)^(1/r) ~= 0.25, well under the 0.5-0.8
@@ -56,24 +52,19 @@ LSH_BANDS = 16
 LSH_ROWS = 2  # MINHASH_K == LSH_BANDS * LSH_ROWS
 SHINGLE_N = 3
 PAIR_CAP = 64  # buckets beyond this emit chain pairs (skew guard)
-# a pair becomes a candidate only if it collides in >= this many DISTINCT
-# small-bucket bands (chain pairs from capped buckets are exempt — they
-# exist to preserve connectivity, not similarity evidence).  r=2 banding
-# keeps J=0.5 recall at 0.99 but lets J~0.03 background pairs through at
-# p ~ 1e-2 per corpus pair — at n surfaces that is O(n^2)*1e-2 spurious
-# candidates (measured: 0.9M of 46k surfaces), ALL discarded by the
-# verify join.  Requiring a second independent band hit squares the
-# noise rate (~200x fewer false candidates) while true near-dups at the
-# 0.5 verify threshold lose only ~5% (P[exactly 1 of 16 bands | >=1] at
-# J=0.5), which the downstream connected components partly re-bridge.
-# This is the frequency-threshold variant of multi-probe LSH — the
-# standard steepening of the S-curve when n makes r=2 noise quadratic.
+# a candidate pair must collide in >= this many DISTINCT small-bucket
+# bands (chain pairs are exempt: they carry connectivity, not evidence).
+# r=2 lets J~0.03 background pairs through at p ~ 1e-2 each, O(n^2)
+# spurious candidates (0.9M of 46k surfaces), all discarded by verify; a
+# second band hit squares that noise (~200x fewer) while J=0.5 near-dups
+# lose ~5%, which the components partly re-bridge (frequency-threshold
+# multi-probe LSH)
 MIN_BAND_HITS = 2
-# Mersenne prime 2^31-1: a*x fits int64 AND the modulo genuinely wraps, so
-# (a*x + b) mod P is an actual permutation-like universal hash.  (A larger
-# prime whose products can't wrap in int64 would be ORDER-PRESERVING — every
-# "permutation" then picks the same min shingle and LSH banding loses all
-# of its amplification.)
+#: T: ``canonicalize`` links at most this many distinct surfaces in one
+#: pass on the driver, more on the distributed path (measured in CHANGES.md)
+ONE_PASS_MAX_SURFACES = 100_000
+# Mersenne prime 2^31-1: a*x fits int64 AND the modulo wraps (a prime whose
+# products cannot wrap would be order-preserving; see hashing.py)
 from ..hashing import P31 as _P31
 from ..hashing import md5_60, md5_60_expr, universal_coeffs
 
@@ -84,11 +75,7 @@ def _lh_coeffs(i: int) -> tuple:
 
 _COEF = np.array([_lh_coeffs(i) for i in range(MINHASH_K)], dtype=np.int64)
 _A, _B = _COEF[:, 0], _COEF[:, 1]
-
-
-def shingle_hash60(s: str) -> int:
-    """Shared engine/oracle shingle hash (hashing.md5_60)."""
-    return md5_60(s)
+_SIG_CHUNK = 8192  # texts per min-reduce: bounds the gathered (rows, K) block
 
 
 def shingles(text: str, n: int = SHINGLE_N) -> List[str]:
@@ -103,22 +90,37 @@ def _perm_matrix(x: np.ndarray) -> np.ndarray:
     return (_A[None, :] * x31 + _B[None, :]) % _P31
 
 
-def minhash_signature(text: str) -> np.ndarray:
-    sh = shingles(text)
-    x = np.fromiter(
-        (shingle_hash60(s) for s in sh), dtype=np.int64, count=len(sh)
-    )
-    return _perm_matrix(x).min(axis=0)
+def _minhash(texts: List[str]):
+    """The MinHash kernel of both strategies, over a batch of texts.
+
+    Returns ``(sig, owner, hashes)``: the (len(texts), K) signatures and
+    every text's sorted distinct shingle hashes, text ``i``'s being the
+    run ``hashes[owner == i]`` (``owner`` is non-decreasing).  Each
+    distinct shingle is hashed once; a signature is one min-reduce over
+    rows of the per-distinct-shingle permutation matrix."""
+    sh = [shingles(t) for t in texts]
+    ids: dict = {}
+    flat = np.fromiter((ids.setdefault(s, len(ids)) for r in sh for s in r), np.int64)
+    lens = np.fromiter(map(len, sh), np.int64, len(sh))
+    hashes = np.fromiter(map(md5_60, ids), np.int64, len(ids))
+    perm, offs = _perm_matrix(hashes), np.concatenate(([0], np.cumsum(lens)))
+    sig = np.empty((len(sh), MINHASH_K), np.int64)
+    for a in range(0, len(sh), _SIG_CHUNK):
+        b = min(a + _SIG_CHUNK, len(sh))
+        sig[a:b] = np.minimum.reduceat(
+            perm[flat[offs[a] : offs[b]]], offs[a:b] - offs[a], axis=0
+        )
+    owner, h = np.repeat(np.arange(len(sh)), lens), hashes[flat]
+    o = np.lexsort((h, owner))
+    owner, h = owner[o], h[o]
+    keep = np.ones(len(h), bool)
+    keep[1:] = (owner[1:] != owner[:-1]) | (h[1:] != h[:-1])
+    return sig, owner[keep], h[keep]
 
 
-_SIG_SCHEMA = StructType(
-    [
-        StructField("surface_id", LongType()),
-        StructField("text", StringType()),
-        StructField("n_mentions", LongType()),
-        StructField("sig", ArrayType(LongType())),
-        StructField("shingle_hashes", ArrayType(LongType())),
-    ]
+_SIG_SCHEMA = (
+    "surface_id long, text string, n_mentions long, sig array<long>, "
+    "shingle_hashes array<long>"
 )
 
 
@@ -129,19 +131,11 @@ def surface_signatures(mentions: DataFrame) -> DataFrame:
     ensure_shipped(mentions.sparkSession)
 
     surfaces = (
-        mentions.groupBy("text")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        # md5-60bit surface id (SQL-computable, unlike xxhash64) — the
-        # component ids downstream are min surface_ids, so the whole
-        # canonicalization output is DuckDB-oracle-checkable
+        _surfaces(mentions)
         .withColumn("surface_id", md5_60_expr(F.col("text")))
-        # explicit width: the surface frame is small in BYTES but every
-        # downstream stage is CPU-heavy per byte (minhash UDF, x16 band
-        # explode, collect_set partials), so letting AQE size-coalesce the
-        # groupBy output (64 MB advisory -> 1-2 partitions) serializes the
-        # whole linking stage on a handful of cores.  An explicit
-        # repartition is respected by AQE and pins the cached partitioning
-        # every consumer inherits.
+        # explicit width: the frame is byte-small but CPU-heavy per byte,
+        # and AQE would size-coalesce the groupBy output to 1-2 partitions,
+        # serializing the whole stage; AQE respects an explicit repartition
         .repartition(
             2 * mentions.sparkSession.sparkContext.defaultParallelism,
             "surface_id",
@@ -150,68 +144,48 @@ def surface_signatures(mentions: DataFrame) -> DataFrame:
 
     def add_sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sigs, shs = [], []
-            for t in pdf["text"]:
-                sh = shingles(t)
-                x = np.fromiter(
-                    (shingle_hash60(s) for s in sh),
-                    dtype=np.int64,
-                    count=len(sh),
-                )
-                sigs.append(_perm_matrix(x).min(axis=0).tolist())
-                shs.append(sorted(int(v) for v in set(x.tolist())))
+            sig, owner, h = _minhash(pdf["text"].tolist())
+            bounds = np.searchsorted(owner, np.arange(len(pdf) + 1))
             yield pd.DataFrame(
                 {
                     "surface_id": pdf["surface_id"],
                     "text": pdf["text"],
                     "n_mentions": pdf["n_mentions"],
-                    "sig": sigs,
-                    "shingle_hashes": shs,
+                    "sig": sig.tolist(),
+                    "shingle_hashes": [
+                        h[a:b].tolist() for a, b in zip(bounds, bounds[1:])
+                    ],
                 }
             )
 
     return surfaces.mapInPandas(add_sig, _SIG_SCHEMA)
 
 
-def band_frame(sigs: DataFrame) -> DataFrame:
-    """One row per (surface_id, band) with the band's identity — the
-    shared blocking stage behind pair emission AND the blocking-stats
-    audit.
+def _surfaces(mentions: DataFrame) -> DataFrame:
+    """(text, n_mentions): the distinct surface forms and their counts."""
+    return mentions.groupBy("text").agg(F.count(F.lit(1)).alias("n_mentions"))
 
-    The identity is the band's two minhashes PACKED into one BIGINT
-    (``mh0 * 2^31 + mh1``): both values are < P31 = 2^31 - 1, so the
-    packing is collision-free and fits int64 exactly ((2^31-1)*2^31 +
-    2^31-1 = 2^62-1).  A fixed-width numeric key keeps the band groupBy
-    inside codegen with cheap hashing — the former comma-joined STRING
-    identity allocated and hashed ~30 bytes per band row, pure CPU tax
-    on a 16-rows-per-surface explode.  SQL-expressible verbatim (the
-    twins compute the same arithmetic).  r=2-specific: a third 31-bit
-    value would overflow int64."""
+
+def band_frame(sigs: DataFrame) -> DataFrame:
+    """One row per (surface_id, band) with the band's identity, shared by
+    pair emission and the blocking-stats audit.  The identity is the
+    band's two minhashes PACKED into one BIGINT (``mh0 * 2^31 + mh1``):
+    both are < 2^31 - 1, so it is collision-free and fits int64, keeps
+    the band groupBy in codegen, and the SQL twins compute the same
+    arithmetic.  r=2-specific: a third 31-bit value would overflow."""
     assert LSH_ROWS == 2, "packed band identity requires r=2"
+    sig = F.col("sig")
+    keys = [sig[b * LSH_ROWS] * F.lit(2_147_483_648) + sig[b * LSH_ROWS + 1]
+            for b in range(LSH_BANDS)]
     return sigs.select(
-        "surface_id",
-        F.posexplode(
-            F.array(
-                *[
-                    (
-                        F.col("sig")[b * LSH_ROWS] * F.lit(2_147_483_648)
-                        + F.col("sig")[b * LSH_ROWS + 1]
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("band", "band_hash"),
+        "surface_id", F.posexplode(F.array(*keys)).alias("band", "band_hash")
     )
 
 
 def blocking_stats(sigs: DataFrame) -> DataFrame:
-    """Per-band blocking audit: singleton/multi bucket counts, the largest
-    bucket, how many buckets tripped the PAIR_CAP chain-pair guard, and
-    exactly how many candidate pairs the guard lets through — the
-    operational go/no-go read BEFORE pointing the linker at a new corpus
-    (max_bucket predicts the verify-join fan-out; n_capped > 0 means the
-    skew guard is live, pairs_emitted is its O(n) bound doing its job).
-    Two key-local count aggregations; output is exactly LSH_BANDS rows."""
+    """Per-band blocking audit, exactly LSH_BANDS rows: singleton/multi
+    bucket counts, the largest bucket (predicts the verify fan-out), how
+    many buckets tripped the PAIR_CAP chain guard, and the pairs emitted."""
     b = band_frame(sigs).groupBy("band", "band_hash").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -220,9 +194,7 @@ def blocking_stats(sigs: DataFrame) -> DataFrame:
         f"THEN (n * (n - 1)) div 2 ELSE n - 1 END"
     )
     return b.groupBy(F.col("band").cast("long").alias("band")).agg(
-        F.sum(F.when(F.col("n") == 1, 1).otherwise(0)).alias(
-            "n_singleton_buckets"
-        ),
+        F.sum(F.when(F.col("n") == 1, 1).otherwise(0)).alias("n_singleton_buckets"),
         F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_multi_buckets"),
         F.max("n").alias("max_bucket"),
         F.sum(F.when(F.col("n") > PAIR_CAP, 1).otherwise(0)).alias("n_capped"),
@@ -230,29 +202,21 @@ def blocking_stats(sigs: DataFrame) -> DataFrame:
     )
 
 
-#: duplication factor for the driver-visible skew-guard row — big enough
-#: that an un-collapsed duplicate stream would visibly distort every
-#: downstream statistic, small enough that the row stays cheap at sf0.01
+#: duplication factor of the skew-guard row: an un-collapsed duplicate
+#: stream would visibly distort every statistic, yet sf0.01 stays cheap
 SKEW_GUARD_K = 16
 
 
 def skew_guard_stats(mentions: DataFrame, k: int = SKEW_GUARD_K) -> DataFrame:
-    """One-row guard-stats report of the linking stage under ``k``-fold
-    corpus duplication — the driver-visible form of the skew stress
-    (jobs/skew_stress.py): the mention stream is replicated ``k`` x under
-    distinct doc_ids with IDENTICAL content (every surface form a head
-    key, the adversarial profile for entity linking) and pushed through
-    the REAL surface/banding/pair/verify/CC operators.
+    """One-row guard stats of the distributed linking operators under
+    ``k``-fold duplication (the driver-visible form of
+    jobs/skew_stress.py): the mentions are replicated ``k`` x under
+    distinct doc_ids with identical content, every surface a head key.
 
-    The invariant this row pins: the mention->surface groupBy collapses
-    duplication MAP-SIDE, so every surface-level statistic (band buckets,
-    max bucket, oversized-bucket count, candidate pairs, verified edges,
-    components) of the k-fold stream must equal the base corpus's
-    EXACTLY, and total mentions must equal exactly k x base.  The DuckDB
-    twin computes those base-corpus values, so a hash match IS the proof
-    that duplication skew never reaches a shuffle — the stress jobs'
-    byte-identical-guards claim as a driver-checkable row instead of
-    BENCH prose.  All columns are exact integers."""
+    The surface groupBy collapses duplication map-side, so every
+    surface-level statistic must equal the base corpus's exactly and the
+    mentions must be exactly k x base; the DuckDB twin computes the base
+    values, so a hash match proves duplication never reaches a shuffle."""
     from ..cache import tracked_persist
 
     spark = mentions.sparkSession
@@ -274,9 +238,7 @@ def skew_guard_stats(mentions: DataFrame, k: int = SKEW_GUARD_K) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_band_buckets"),
             F.max("n").alias("max_bucket_size"),
-            F.sum(F.when(F.col("n") > PAIR_CAP, 1).otherwise(0)).alias(
-                "oversized_buckets"
-            ),
+            F.sum(F.when(F.col("n") > PAIR_CAP, 1).otherwise(0)).alias("oversized_buckets"),
         )
     )
     pairs = tracked_persist(candidate_pairs(sigs))
@@ -290,8 +252,7 @@ def skew_guard_stats(mentions: DataFrame, k: int = SKEW_GUARD_K) -> DataFrame:
     )
     pair_count = pairs.agg(F.count(F.lit(1)).alias("candidate_pairs"))
     edge_count = edges.agg(F.count(F.lit(1)).alias("verified_edges"))
-    # single-row folds: every frame here is exactly one row, so the
-    # crossJoins are broadcast one-row merges, not cartesian blowups
+    # every frame here is one row: the crossJoins are one-row merges
     return (
         surf_stats.withColumn("k", F.lit(k).cast("long"))
         .crossJoin(bucket_stats)
@@ -307,16 +268,10 @@ def skew_guard_stats(mentions: DataFrame, k: int = SKEW_GUARD_K) -> DataFrame:
 
 
 def candidate_pairs(sigs: DataFrame, min_hits: int | None = None) -> DataFrame:
-    """LSH banding -> (band, band_hash) buckets -> skew-capped pair
-    emission -> ``MIN_BAND_HITS`` frequency filter.
-
-    A pair survives only if it collided in >= ``min_hits`` (default
-    ``MIN_BAND_HITS``) distinct small-bucket bands OR rode a capped
-    bucket's connectivity chain (see the constant's rationale: one r=2
-    band hit is weak evidence, and its false-candidate mass grows O(n^2)
-    with corpus size).  ``min_hits=1`` disables the filter — the
-    kg_band_filter_recall audit measures what the default costs against
-    that unfiltered baseline."""
+    """LSH buckets -> skew-capped pair emission -> band-hit filter: a pair
+    survives if it collided in >= ``min_hits`` (default MIN_BAND_HITS)
+    distinct small-bucket bands OR rode a capped bucket's chain.
+    ``min_hits=1`` disables the filter (kg_band_filter_recall's baseline)."""
     if min_hits is None:
         min_hits = MIN_BAND_HITS
     bands = band_frame(sigs)
@@ -324,25 +279,18 @@ def candidate_pairs(sigs: DataFrame, min_hits: int | None = None) -> DataFrame:
         F.sort_array(F.collect_set("surface_id")).alias("members")
     ).where(F.size("members") > 1)
 
-    # small buckets: all pairs; oversized buckets: consecutive chain pairs
-    # (connectivity-preserving O(n) fallback for skewed head buckets).
-    # Both branches emit from ONE conditional expression so the band
-    # groupBy above is consumed exactly once — a filter/union formulation
-    # would re-execute the shuffle per branch (two stages + a union), pure
-    # fixed latency that the whole-job N->4N pair pays at both levels.
+    # small buckets: all pairs; oversized ones: consecutive chain pairs.
+    # ONE conditional expression consumes the band groupBy once (a
+    # filter/union would re-run the shuffle per branch)
     chain_expr = F.zip_with(
         F.slice("members", 1, F.size("members") - 1),
         F.slice("members", 2, F.size("members") - 1),
-        lambda a, b: F.struct(
-            a.alias("a"), b.alias("b"), F.lit(1).alias("c")
-        ),
+        lambda a, b: F.struct(a.alias("a"), b.alias("b"), F.lit(1).alias("c")),
     )
     pair_expr = F.when(F.size("members") <= PAIR_CAP, _pairs_expr()).otherwise(
         chain_expr
     )
-    # the hit-count groupBy replaces the old dropDuplicates — same shuffle
-    # (src, dst) key, but the aggregate carries the evidence the filter
-    # needs: how many independent small-bucket bands voted for the pair
+    # the (src, dst) groupBy dedups AND counts the small-bucket band votes
     return (
         grouped.select(F.explode(pair_expr).alias("pr"))
         .select(
@@ -355,9 +303,7 @@ def candidate_pairs(sigs: DataFrame, min_hits: int | None = None) -> DataFrame:
             F.max("chained").alias("chained"),
             F.sum(F.lit(1) - F.col("chained")).alias("n_small"),
         )
-        .where(
-            (F.col("chained") == 1) | (F.col("n_small") >= min_hits)
-        )
+        .where((F.col("chained") == 1) | (F.col("n_small") >= min_hits))
         .select("src", "dst")
     )
 
@@ -375,17 +321,10 @@ def _pairs_expr():
 
 
 def band_filter_recall(mentions: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Honesty audit for the MIN_BAND_HITS candidate filter (the same
-    discipline as ds_lsh_recall_eval / ds_ivf_recall_eval: every
-    approximation ships with a query that measures it against the exact
-    baseline).  Runs the linking candidate+verify chain twice — with the
-    frequency filter and with ``min_hits=1`` (unfiltered) — and reports
-    the candidate counts, verified-edge counts, and the edge recall in
-    integer micro-units.  Filtered edges are a subset of unfiltered by
-    construction, so recall is exact set containment, not an estimate.
-
-    One row: (n_cand_filtered, n_cand_all, n_edges_filtered, n_edges_all,
-    edge_recall_micro)."""
+    """Audit of the MIN_BAND_HITS filter against ``min_hits=1``: one row
+    (n_cand_filtered, n_cand_all, n_edges_filtered, n_edges_all,
+    edge_recall_micro).  Filtered edges are a subset of the unfiltered
+    ones, so the recall is exact set containment, not an estimate."""
     from ..cache import tracked_persist
 
     sigs = tracked_persist(surface_signatures(mentions))
@@ -410,17 +349,9 @@ def band_filter_recall(mentions: DataFrame, threshold: float = 0.5) -> DataFrame
 def verified_edges(sigs: DataFrame, pairs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard over shingle-hash sets for candidate pairs (J2-style
     equi-joins; the shingle arrays ride along, no re-tokenization)."""
-    # join strategy is AQE's runtime call, deliberately un-hinted: since
-    # the MIN_BAND_HITS filter, the pair frame is usually the SMALL side
-    # (tens of KB per million surfaces) and AQE broadcasts it — the heavy
-    # signature side (shingle arrays) then never shuffles at all.  When a
-    # pathological corpus makes pairs big, AQE's runtime sizes fall back
-    # to a shuffled join instead of OOMing a forced broadcast; either
-    # way sort-merge's double sort of array payloads is avoided for
-    # whichever side stays hash-built.  (The previous forced shuffle_hash
-    # hint was sized for the pre-filter regime where candidates were
-    # ~20x the surface count; it pinned TWO shuffles of the array-heavy
-    # signature frame on every run.)
+    # un-hinted: the filtered pair frame is usually the small side and AQE
+    # broadcasts it, so the shingle arrays never shuffle; a huge pair
+    # frame falls back to a shuffled join instead of OOMing a broadcast
     s = sigs.select("surface_id", "shingle_hashes")
     j = (
         pairs.join(s.withColumnRenamed("surface_id", "src").withColumnRenamed("shingle_hashes", "sh_a"), "src")
@@ -441,26 +372,18 @@ def connected_components(
     max_iter: int = 8,
     small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
-    """Connected components over the surface-form graph, strategy-selected
-    by size (like Spark's own broadcast-join threshold):
+    """Connected components, strategy-selected by size:
 
-    * **small graph** (≤ ``small_graph_edges``, the common case — the graph
-      is over DISTINCT surfaces, orders of magnitude smaller than the
-      mention stream): one shuffle into a single partition + a one-pass
-      union-find inside an Arrow UDF.  Min-root union-find is
-      row-order-independent, so the result is deterministic.
+    * **small graph** (<= ``small_graph_edges``): one shuffle into a
+      single partition and a min-root union-find in an Arrow UDF
+      (row-order-independent, so deterministic);
     * **large graph**: iterative min-id propagation with pointer jumping
-      (O(log diameter) rounds, localCheckpoint bounds lineage) — the
-      fully-distributed path.
+      (O(log diameter) rounds, localCheckpoint bounds lineage).
 
     vertices: (surface_id); edges: (src, dst) undirected.
     Returns (surface_id, component = min surface_id of the cluster).
     """
-    # bounded strategy probe: LIMIT threshold+1 then count — cost capped
-    # by the threshold regardless of graph size (a full count() would be
-    # an O(edges) driver barrier spent only to pick a strategy; the edge
-    # frame is persisted by the caller, so this reads at most
-    # ``small_graph_edges + 1`` cached rows)
+    # bounded probe: reads at most small_graph_edges + 1 rows
     probe = edges.limit(small_graph_edges + 1).count()
     if probe <= small_graph_edges:
         return _cc_single_pass(vertices, edges)
@@ -470,10 +393,8 @@ def connected_components(
 def _cc_single_pass(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
-    # vertices ride along as SELF-edges (src == dst): keeps both columns
-    # non-nullable int64 end-to-end.  A nullable long would surface in
-    # pandas as float64 and silently destroy 64-bit hash ids (53-bit
-    # mantissa) — precision loss that mislinks clusters.
+    # vertices ride along as SELF-edges: both columns stay non-nullable
+    # int64 (a nullable long reaches pandas as float64 and loses ids)
     combined = vertices.select(
         F.col("surface_id").alias("src"),
         F.col("surface_id").alias("dst"),
@@ -547,10 +468,7 @@ def _cc_iterative(vertices: DataFrame, edges: DataFrame, max_iter: int) -> DataF
         ptr = stepped.select(
             F.col("surface_id").alias("p_id"), F.col("component").alias("p_comp")
         )
-        # lazy checkpoint: lineage is cut but materialization rides the
-        # NEXT action instead of an extra eager per-round job — each
-        # driver-synchronized round is a fixed serial term that more
-        # cores cannot shrink (the whole-job N->4N Amdahl tail)
+        # lazy checkpoint: cuts lineage without an extra eager job a round
         new_labels = (
             stepped.join(ptr, stepped.component == ptr.p_id, "left")
             .select(
@@ -559,11 +477,8 @@ def _cc_iterative(vertices: DataFrame, edges: DataFrame, max_iter: int) -> DataF
             )
             .localCheckpoint(eager=False)
         )
-        # convergence probe every 2nd round (and never on round 0): with
-        # pointer jumping, rounds needed ~ log2(diameter), so probing per
-        # round costs one driver-synchronized job each to save at most
-        # one — probing half as often halves the serial probe count at
-        # the price of at most ONE extra propagation round after quiesce
+        # convergence probe every 2nd round: half the serial probe jobs for
+        # at most one extra propagation round
         if it % 2 == 1:
             changed = (
                 new_labels.alias("n")
@@ -586,35 +501,30 @@ def canonicalize(
     jaccard_threshold: float = 0.5,
     min_band_hits: int | None = None,
 ) -> DataFrame:
-    """Full linking stage: mentions -> (text, canonical_text, component).
+    """Full linking stage: mentions -> (text, canonical_text, component,
+    n_mentions), on the one-pass or the distributed strategy (module
+    docstring); both give the same rows.
 
-    Canonical election is a total order (mention count desc, surface asc) so
-    the result is independent of partitioning and cluster size.
-
-    ``min_band_hits`` is the per-job dial on the MIN_BAND_HITS candidate
-    filter (default: the module constant, 2).  The filter trades ~3-5% of
-    border edges (Jaccard just above the threshold — measured 96.7% edge
-    recall on the synthetic sf0.01 corpus and ~95% on a deliberately
-    border-heavy adversarial corpus, see kg_band_filter_recall and
-    tests/test_linking.py) for an order-of-magnitude fewer candidates.
-    Pass 1 to disable it when a job values recall over throughput; the
-    kg_band_filter_recall audit measures exactly what the default costs
-    on any given corpus."""
-    # sigs feeds four consumers (pairs, verify, components, labeling) and
-    # edges feeds two — persist the small per-surface frames or the
-    # mention-stream groupBy re-executes once per consumer
+    ``min_band_hits`` is the per-job dial on the MIN_BAND_HITS filter
+    (default 2).  The filter trades ~3-5% of border edges (96.7% edge
+    recall on sf0.01, ~95% on a border-heavy adversarial corpus; see
+    kg_band_filter_recall) for an order of magnitude fewer candidates;
+    pass 1 when a job values recall over throughput."""
+    # bounded probe: at most T + 1 surface rows reach the driver
+    surf = _surfaces(mentions).limit(ONE_PASS_MAX_SURFACES + 1).toPandas()
+    if len(surf) <= ONE_PASS_MAX_SURFACES:
+        hits = MIN_BAND_HITS if min_band_hits is None else min_band_hits
+        out = _link_surfaces(surf, jaccard_threshold, hits)
+        # one partition: each canon bucket is committed as one file
+        return mentions.sparkSession.createDataFrame(out, _CANON_SCHEMA).coalesce(1)
+    # persist the multi-consumer frames, or the groupBy re-runs per consumer
     from ..cache import tracked_persist
 
     sigs = tracked_persist(surface_signatures(mentions))
     pairs = candidate_pairs(sigs, min_hits=min_band_hits)
     edges = tracked_persist(verified_edges(sigs, pairs, jaccard_threshold))
-    # CC over the EDGE ENDPOINTS only: the left join below coalesces
-    # every unlinked surface to its own id, so isolated vertices never
-    # need to ride through the union-find — the component frame shrinks
-    # from |surfaces| to |linked surfaces| (orders of magnitude at
-    # corpus scale, where most surfaces join nothing), the single-pass
-    # path's one-partition shuffle carries edges only, and the join back
-    # broadcasts
+    # CC over the edge endpoints only: the left join below gives every
+    # unlinked surface its own id
     endpoints = (
         edges.select(F.col("src").alias("surface_id"))
         .unionByName(edges.select(F.col("dst").alias("surface_id")))
@@ -622,9 +532,7 @@ def canonicalize(
     )
     comps = connected_components(endpoints, edges)
 
-    # labeled feeds TWO consumers (the canonical-election window and the
-    # final label join): unpersisted, the component computation — incl.
-    # the union-find pass — would execute once per consumer
+    # labeled feeds the election window AND the final join
     labeled = tracked_persist(
         sigs.select("surface_id", "text", "n_mentions").join(
             comps, "surface_id", "left"
@@ -633,9 +541,7 @@ def canonicalize(
 
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("component").orderBy(
-        F.desc("n_mentions"), F.asc("text")
-    )
+    w = Window.partitionBy("component").orderBy(F.desc("n_mentions"), F.asc("text"))
     canon = (
         labeled.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") == 1)
@@ -644,6 +550,87 @@ def canonicalize(
     return labeled.join(canon, "component").select(
         "text", "canonical_text", "component", "n_mentions"
     )
+
+
+_CANON_SCHEMA = "text string, canonical_text string, component long, n_mentions long"
+
+
+def _runs(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The concatenated ranges ``arange(s, s + l)`` over (starts, lens)."""
+    return np.repeat(starts - np.cumsum(lens) + lens, lens) + np.arange(lens.sum())
+
+
+def _link_surfaces(pdf: pd.DataFrame, threshold: float, min_hits: int) -> pd.DataFrame:
+    """Steps 1-8 of the module docstring in NumPy over a (text, n_mentions)
+    frame.  Surfaces get dense indices in surface-id order, so a smaller
+    index is a smaller id throughout: sorted bucket members, src < dst
+    and the min-index component root all match the distributed path."""
+    if not len(pdf):
+        return pd.DataFrame(columns=["text", "canonical_text", "component", "n_mentions"])
+    ids = np.fromiter(map(md5_60, pdf["text"]), np.int64, len(pdf))
+    o = np.argsort(ids, kind="stable")
+    ids, n = ids[o], len(ids)
+    texts = pdf["text"].to_numpy(object)[o]
+    nm = pdf["n_mentions"].to_numpy(np.int64)[o]
+    sig, owner, h = _minhash(texts.tolist())
+
+    # bands -> buckets: per band a stable sort of the packed keys puts
+    # each bucket's members in one run, in index order; pairs pack as i*n+j
+    keys = sig[:, 0::LSH_ROWS] * 2_147_483_648 + sig[:, 1::LSH_ROWS]
+    small, chain = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for band in range(LSH_BANDS):
+        order = np.argsort(keys[:, band], kind="stable")
+        k = keys[order, band]
+        starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+        sizes = np.diff(np.r_[starts, n])
+        for s in np.unique(sizes[sizes > 1]):
+            st = starts[sizes == s][:, None]
+            if s <= PAIR_CAP:
+                a, b = np.triu_indices(s, 1)
+                small.append((order[st + a] * n + order[st + b]).ravel())
+            else:
+                a = np.arange(s - 1)
+                chain.append((order[st + a] * n + order[st + a + 1]).ravel())
+    hit, n_hits = np.unique(np.concatenate(small), return_counts=True)
+    cand = np.union1d(hit[n_hits >= min_hits], np.concatenate(chain))
+    src, dst = cand // n, cand % n
+
+    # exact Jaccard over (pair, shingle) rows: a shingle both sides share
+    # is the one duplicated row of its pair
+    start = np.searchsorted(owner, np.arange(n + 1))
+    size = np.diff(start)
+    hid = np.unique(h, return_inverse=True)[1].astype(np.int64)
+    p = np.arange(len(cand))
+    pair = np.r_[np.repeat(p, size[src]), np.repeat(p, size[dst])]
+    rows = np.r_[_runs(start[src], size[src]), _runs(start[dst], size[dst])]
+    key = np.sort(pair * (len(h) + 1) + hid[rows])
+    dup = key[1:][key[1:] == key[:-1]] // (len(h) + 1)
+    inter = np.bincount(dup, minlength=len(cand))
+    linked = inter / (size[src] + size[dst] - inter) >= threshold
+    src, dst = src[linked], dst[linked]
+
+    # components: min-label propagation with pointer jumping; the fixed
+    # point labels every surface with the min index of its component
+    lab = np.arange(n)
+    while True:
+        new, m = lab.copy(), np.minimum(lab[src], lab[dst])
+        np.minimum.at(new, src, m)
+        np.minimum.at(new, dst, m)
+        new = new[new]
+        if (new == lab).all():
+            break
+        lab = new
+
+    # election: the first row of each component under (component,
+    # -n_mentions, text)
+    rank = np.empty(n, np.int64)
+    rank[np.argsort(texts, kind="stable")] = np.arange(n)
+    o = np.lexsort((rank, -nm, lab))
+    first = o[np.r_[True, lab[o][1:] != lab[o][:-1]]]
+    canon = np.empty(n, np.int64)
+    canon[lab[first]] = first
+    return pd.DataFrame({"text": texts, "canonical_text": texts[canon[lab]],
+                         "component": ids[lab], "n_mentions": nm})
 
 
 def canonical_triples(mentions: DataFrame, canon_map: DataFrame) -> DataFrame:

@@ -12,10 +12,11 @@ import os
 from pyspark.sql import SparkSession
 
 
-def default_cpus() -> str:
-    """``SPARK_GRAFT_CPUS`` if set, else the number of cores this process
-    may run on."""
-    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if it is a number, else (unset, ``'*'`` or any
+    other value) the number of cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -24,10 +25,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cpus = default_cpus()
-    master = master or f"local[{cpus}]"
-    # a non-numeric value ("*") means every core
-    n = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+    n = default_cpus()
+    master = master or f"local[{n}]"
     if shuffle_partitions is None:
         # size to parallelism; at cluster scale this is ~2-3x total cores
         # (AQE coalesces small partitions back down at runtime)

@@ -60,7 +60,7 @@ def main() -> None:
     from ehr_ner_spark.operators.paths import stress_centrality
     from ehr_ner_spark.session import default_cpus, get_spark
 
-    cpus = int(default_cpus())
+    cpus = default_cpus()
     spark = get_spark(
         app_name="kg-graph-report",
         master=f"local[{cpus}]",

@@ -48,7 +48,7 @@ def main() -> None:
     from ehr_ner_spark.operators.mention_detect import detect_mentions
     from ehr_ner_spark.session import default_cpus, get_spark
 
-    cpus = int(default_cpus())
+    cpus = default_cpus()
     spark = get_spark(
         app_name=f"skew-stress-{k}x",
         master=f"local[{cpus}]",

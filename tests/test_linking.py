@@ -14,7 +14,6 @@ from ehr_ner_spark.operators.linking import (
     canonicalize,
     candidate_pairs,
     connected_components,
-    minhash_signature,
     shingles,
     surface_signatures,
     verified_edges,
@@ -108,15 +107,24 @@ def test_determinism_across_partitioning(spark, mentions):
 
 def test_minhash_lsh_recall():
     """Identical signatures for identical strings; near-dups collide in at
-    least one band with overwhelming probability at J>=0.8."""
+    least one band with overwhelming probability at J>=0.8.  The batched
+    kernel equals the per-text definition: min over the permuted md5-60
+    hashes of the text's shingles."""
     import numpy as np
 
-    a = minhash_signature("aspirin100mg")
-    b = minhash_signature("aspirin100mg")
+    from ehr_ner_spark.hashing import md5_60
+    from ehr_ner_spark.operators.linking import _minhash, _perm_matrix
+
+    texts = ["aspirin100mg", "aspirin100mg", "aspirin100mgx", "", "ab"]
+    sig, owner, hashes = _minhash(texts)
+    a, b, c = sig[:3]
     assert (a == b).all()
-    c = minhash_signature("aspirin100mgx")
     agree = float((a == c).mean())
     assert agree > 0.5  # J(a, c) ~ 11/13
+    for i, t in enumerate(texts):
+        x = np.array(sorted({md5_60(s) for s in shingles(t)}), dtype=np.int64)
+        assert (hashes[owner == i] == x).all()
+        assert (sig[i] == _perm_matrix(x).min(axis=0)).all()
 
 
 def test_connected_components_chain(spark):
@@ -350,3 +358,59 @@ def test_canonicalize_min_band_hits_dial(spark, mentions):
     n_base = base.select("component").distinct().count()
     n_loose = loose.select("component").distinct().count()
     assert n_loose <= n_base
+
+
+# degenerate and skewed surfaces: empty, whitespace, 1-2 characters, CJK,
+# near-duplicates with tied counts; 100 border pairs at J ~ 0.53, some of
+# which collide in one band only (the MIN_BAND_HITS filter decides them);
+# and 150 surfaces sharing a 60-char prefix (J ~ 0.9): nearly every band
+# puts them in one bucket larger than PAIR_CAP, so they link by chain pairs
+CHAIN_PREFIX = _hexstr("chain", 60)
+PARITY_SURFACES = (
+    ["", " ", "  \t", "a", "b", "ab", "ba", "é", "阿司匹林", "阿司匹林片",
+     "阿司匹林肠溶片", "布洛芬", "2型糖尿病", "aspirin100mg", "aspirin100mgx",
+     "aspirin100m", "chemotherapy", "chemotherapyy"]
+    + [t for i in range(100) for t in (
+        _hexstr(f"b31:{i}", 31),
+        _hexstr(f"b31:{i}", 22) + _hexstr(f"p31:{i}", 9))]
+    + [CHAIN_PREFIX + "%03d" % i for i in range(150)]
+)
+
+
+@pytest.mark.parametrize("min_band_hits", [None, 1])
+def test_canonicalize_strategies_agree(spark, monkeypatch, min_band_hits):
+    """The one-pass strategy and the distributed one give identical rows.
+    T = -1 forces the distributed path even for empty input (a probe
+    count of 0 is never <= -1); T above the input size forces one pass."""
+    from ehr_ner_spark.operators import linking
+    from ehr_ner_spark.operators.linking import blocking_stats
+
+    rows = [
+        (i * 10 + k, "r", "s", "DTN", 0, len(t), t)
+        for i, t in enumerate(PARITY_SURFACES)
+        for k in range(1 + i % 3)
+    ]
+    m = _mentions_df(spark, rows)
+    empty = _mentions_df(spark, [])
+    stats = blocking_stats(surface_signatures(m)).agg(F.sum("n_capped")).first()
+    assert stats[0] > 0, "no band bucket exceeds PAIR_CAP"
+
+    one_pass = []
+    real = linking._link_surfaces
+    monkeypatch.setattr(
+        linking, "_link_surfaces", lambda *a: one_pass.append(1) or real(*a)
+    )
+    got = {}
+    for t in (-1, len(PARITY_SURFACES) + 1):
+        monkeypatch.setattr(linking, "ONE_PASS_MAX_SURFACES", t)
+        got[t] = [
+            sorted(tuple(r) for r in
+                   canonicalize(df, min_band_hits=min_band_hits).collect())
+            for df in (m, empty)
+        ]
+    assert len(one_pass) == 2  # only the T above the input size
+    dist, one = got.values()
+    assert dist == one
+    assert len(one[0]) == len(PARITY_SURFACES) and one[1] == []
+    # the 150-surface block links through its chain pairs
+    assert len({r[2] for r in one[0] if r[0].startswith(CHAIN_PREFIX)}) == 1

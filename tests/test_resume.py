@@ -68,8 +68,9 @@ def test_kill_resume_identical(spark, sf_dir, tmp_path):
 
 
 def test_resume_scores_only_pending_buckets(spark, sf_dir, tmp_path, monkeypatch):
-    """A fresh run commits at most one mentions file per bucket; a resumed
-    run sends the scorer exactly the documents of the pending buckets."""
+    """A fresh run commits at most one mentions file per bucket and exactly
+    one canon file per bucket (the one-pass linker returns one partition);
+    a resumed run sends the scorer exactly the pending buckets' documents."""
     from pyspark.sql import functions as F
 
     import ehr_ner_spark.pipeline as pipeline
@@ -80,6 +81,8 @@ def test_resume_scores_only_pending_buckets(spark, sf_dir, tmp_path, monkeypatch
     buckets = IceTable(clean_root).committed_buckets("mentions")
     assert len(buckets) == 8
     assert all(len(b["files"]) <= 1 for b in buckets.values())
+    canon = IceTable(clean_root).committed_buckets("canon")
+    assert sorted(len(b["files"]) for b in canon.values()) == [1] * 8
 
     crash_root = str(tmp_path / "crash")
     with pytest.raises(RuntimeError, match="simulated crash"):

@@ -21,7 +21,7 @@ PICK = ["kg_mentions", "kg_canonical_triples", "ds_minhash_lsh_pairs",
         "rel_session_window_native", "mm_audio_match"]
 BLURB = {
     "kg_mentions": "Flagship battery detect: ONE explicit doc-hash Exchange, ONE Arrow scorer stage, content pruned before the mention stream.",
-    "kg_canonical_triples": "Whole north-rule pipeline: detect -> LSH linking -> CC -> election -> triples.",
+    "kg_canonical_triples": "Whole north-rule pipeline: detect -> LSH linking -> CC -> election -> triples; below linking.ONE_PASS_MAX_SURFACES the canon map is one NumPy pass on the driver and enters the plan as a one-partition scan.",
     "ds_minhash_lsh_pairs": "MinHash LSH: map-side partial-min signature agg, band equi-join, candidate-restricted verify over the persisted shingle frame.",
     "ds_ngram_jaccard": "Exact n-gram Jaccard with the hot-shingle DF cap as a broadcast anti-join BEFORE the self-join.",
     "ds_bm25_topk": "BM25: broadcast battery, candidate restriction before any score shuffle, per-query top-k as a partial WindowGroupLimit heap.",
