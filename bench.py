@@ -171,7 +171,7 @@ def _run_scoring(spark, sf_dir: str, rep: int) -> tuple[float, int]:
     best = float("inf")
     for _ in range(2):  # min-of-2: shields against machine noise
         t0 = time.time()
-        _sink(detect_mentions(big, num_partitions=0))
+        _sink(detect_mentions(big))
         best = min(best, time.time() - t0)
     return best, n_rows
 

@@ -221,7 +221,7 @@ def kg_mentions_crf(spark: SparkSession, sf_dir: str) -> DataFrame:
     two linear recursive CTEs (forward scores + backpointers, then the
     backtrace walk) — operators/crf_sql.py.  max_seq_length=128 keeps the
     oracle recursion shallow; tests cover the 512 contract."""
-    from .operators.crf_detect import detect_mentions_crf
+    from .operators.mention_detect import detect_mentions_crf
 
     return detect_mentions_crf(
         corpus(spark, sf_dir), num_partitions=8, max_seq_length=128
@@ -271,7 +271,7 @@ def kg_train_tagger(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected and asserted as such in tests/test_train.py)."""
     from .operators.train import train_metrics
 
-    # num_partitions=None: follow the session's parallelism (the trainer is
+    # num_partitions=None: keep the scan's partitioning (the trainer is
     # integer-exact, so the result is partitioning-independent by design)
     return train_metrics(
         corpus(spark, sf_dir), max_seq_length=128, epochs=3, num_partitions=None
@@ -405,7 +405,7 @@ def kg_model_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode paths run at max_seq_length=128 (one consistent truncation; the
     512 contracts are pytest-covered), and every cell is hash-checked by
     ONE DuckDB query embedding all four oracle pipelines."""
-    from .operators.crf_detect import detect_mentions_crf
+    from .operators.mention_detect import detect_mentions_crf
     from .operators.metrics import micro_prf
     from .operators.priority import flat_projection
     from .operators.sl_detect import detect_mentions_sl, detect_mentions_sl_crf
@@ -3180,7 +3180,7 @@ def kg_ensemble_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the four detect pipelines of kg_model_matrix (each span set
     DISTINCT + DIN-excluded, P9), then ONE union + map-side-combined
     vote count; the oracle embeds all four decode twins in one query."""
-    from .operators.crf_detect import detect_mentions_crf
+    from .operators.mention_detect import detect_mentions_crf
     from .operators.sl_detect import detect_mentions_sl, detect_mentions_sl_crf
 
     c = corpus(spark, sf_dir)
@@ -3225,7 +3225,7 @@ def kg_model_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries all five span columns), and the 4x4 scaffold is a broadcast
     of the 4-row sizes frame against itself, so nothing here scales with
     the corpus except the already-audited detect pipelines."""
-    from .operators.crf_detect import detect_mentions_crf
+    from .operators.mention_detect import detect_mentions_crf
     from .operators.sl_detect import detect_mentions_sl, detect_mentions_sl_crf
 
     c = corpus(spark, sf_dir)

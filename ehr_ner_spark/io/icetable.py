@@ -6,7 +6,8 @@ Layout::
     <root>/
       data/<stage>/bucket=<i>/part-*.parquet     (bucket-partitioned data)
       snapshots/snap-<seq>.json                  (manifest: per-bucket files,
-                                                  row counts, lineage, metrics)
+                                                  row counts, stage schema,
+                                                  lineage, metrics)
       CURRENT                                    (name of live snapshot;
                                                   atomically replaced)
 
@@ -56,6 +57,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BUCKET_COL = "icetable_bucket"
 
@@ -202,6 +204,7 @@ class IceTable:
             return self.current_snapshot()
 
         stage_dir = os.path.join(self.root, "data", stage)
+        schema = df.schema.json()  # read_stage's frame when no file is written
         bucketed = df.withColumn(
             BUCKET_COL, bucket_of(bucket_key, n_buckets)
         ).where(F.col(BUCKET_COL).isin(pending))
@@ -267,6 +270,7 @@ class IceTable:
             st["buckets"] = buckets
             st["n_buckets"] = n_buckets
             st["bucket_key"] = bucket_key
+            st["schema"] = schema
             stages[stage] = st
             snapshot = {
                 "seq": prev["seq"] + 1,
@@ -294,15 +298,20 @@ class IceTable:
         )
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Read only the files listed in the CURRENT manifest."""
+        """Read only the files listed in the CURRENT manifest; a stage that
+        committed no file reads as an empty frame of its recorded schema."""
         snap = self.current_snapshot()
         if not snap or stage not in snap.get("stages", {}):
             raise FileNotFoundError(f"stage {stage} has no committed snapshot")
+        st = snap["stages"][stage]
         files = []
-        for b in snap["stages"][stage]["buckets"].values():
+        for b in st["buckets"].values():
             files.extend(os.path.join(self.root, f) for f in b["files"])
         if not files:
-            raise FileNotFoundError(f"stage {stage} committed but empty")
+            if "schema" not in st:
+                raise FileNotFoundError(f"stage {stage} committed but empty")
+            schema = StructType.fromJson(json.loads(st["schema"]))
+            return spark.createDataFrame([], schema)
         return spark.read.parquet(*files).drop(BUCKET_COL)
 
     # -- maintenance: compaction, snapshot expiry, orphan GC ----------------

@@ -20,17 +20,16 @@ SQL-expressible with window functions — no recursion — so the DuckDB twin
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional
+from functools import partial
+from typing import Dict, Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
 from ..hashing import md5_60
-from ..kernel.wordpiece import tokenize_text
 from ..queries_battery import QUERIES
-from .mention_detect import MENTION_SCHEMA
+from .mention_detect import _detect_stage
 from .mention_sql import TOKEN_RE
 
 START_T = 0.985
@@ -70,39 +69,12 @@ def detect_mentions_mrc(
     queries: Optional[Dict[str, str]] = None,
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """corpus -> MRC start/end span rows (same schema as detect_mentions)."""
-    queries = dict(queries or QUERIES)
-    spark = corpus_df.sparkSession
-    from ..pyfiles import ensure_shipped
-
-    ensure_shipped(spark)
-    bc = spark.sparkContext.broadcast(list(queries.keys()))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tags = bc.value
-        for pdf in batches:
-            rows: dict = {k: [] for k in
-                          ("doc_id", "repo", "content_sha", "type",
-                           "start_pos", "end_pos", "text")}
-            for doc_id, repo, sha, content in zip(
-                pdf["doc_id"], pdf["repo"], pdf["content_sha"], pdf["content"]
-            ):
-                for (pid, typ, s, e, txt) in mrc_spans_doc(
-                    tags, tokenize_text(content), pid=int(doc_id)
-                ):
-                    rows["doc_id"].append(pid)
-                    rows["repo"].append(repo)
-                    rows["content_sha"].append(sha)
-                    rows["type"].append(typ)
-                    rows["start_pos"].append(s)
-                    rows["end_pos"].append(e)
-                    rows["text"].append(txt)
-            yield pd.DataFrame(rows)
-
-    inp = corpus_df.select("doc_id", "repo", "content_sha", "content")
-    if num_partitions:
-        inp = inp.repartition(num_partitions, "doc_id")
-    return inp.mapInPandas(run, MENTION_SCHEMA)
+    """corpus -> MRC start/end span rows (same schema and plan as
+    detect_mentions; ``mrc_spans_doc`` is the decode kernel)."""
+    tags = list(queries or QUERIES)
+    return _detect_stage(
+        corpus_df, lambda: partial(mrc_spans_doc, tags), num_partitions
+    )
 
 
 def mrc_oracle_sql(corpus_sql: str) -> str:

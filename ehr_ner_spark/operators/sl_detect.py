@@ -1,6 +1,11 @@
-"""Flat-SL mention detection stage (model family #2, U2) and the SL-vs-QASL
-comparison frame (the reference's 4-model side-by-side evaluation,
-/root/reference/results/evaluate.py:121-197)."""
+"""Flat-SL mention detection (model family #2, U2), its CRF variant (#4) and
+the per-token SL label stream behind the reference's 4-model side-by-side
+evaluation (results/evaluate.py:121-197).
+
+Both detectors run ``mention_detect._detect_stage``; each supplies only
+its per-worker decode kernel, whose closure carries the type list.
+``num_partitions`` means what it means there: ``None`` keeps the caller's
+partitioning, ``n > 0`` repartitions on ``doc_id`` into ``n`` tasks."""
 
 from __future__ import annotations
 
@@ -13,7 +18,7 @@ from pyspark.sql import DataFrame
 from ..kernel.sl import DeterministicSLScorer, sl_merged_labels, sl_predict
 from ..kernel.wordpiece import tokenize_text
 from ..queries_battery import QUERIES
-from .mention_detect import MENTION_SCHEMA
+from .mention_detect import _detect_stage
 
 TOKEN_LABEL_SCHEMA = "pid long, pos int, label string"
 
@@ -25,39 +30,15 @@ def detect_mentions_sl(
     max_seq_length: int = 512,
 ) -> DataFrame:
     """corpus -> flat (non-overlapping) mentions via the SL label space."""
-    from ..pyfiles import ensure_shipped
-
-    spark = corpus_df.sparkSession
-    ensure_shipped(spark)
     types = list(types or QUERIES.keys())
-    bc_types = spark.sparkContext.broadcast(types)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = DeterministicSLScorer(bc_types.value)
-        for pdf in batches:
-            rows: dict = {k: [] for k in (
-                "doc_id", "repo", "content_sha", "type",
-                "start_pos", "end_pos", "text")}
-            for doc_id, repo, sha, content in zip(
-                pdf["doc_id"], pdf["repo"], pdf["content_sha"], pdf["content"]
-            ):
-                toks = tokenize_text(content)
-                for (_pid, typ, s, e, txt) in sl_predict(
-                    scorer, toks, pid=int(doc_id), max_seq_length=max_seq_length
-                ):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["repo"].append(repo)
-                    rows["content_sha"].append(sha)
-                    rows["type"].append(typ)
-                    rows["start_pos"].append(s)
-                    rows["end_pos"].append(e)
-                    rows["text"].append(txt)
-            yield pd.DataFrame(rows)
+    def make_decode():
+        scorer = DeterministicSLScorer(types)
+        return lambda toks, pid: sl_predict(
+            scorer, toks, pid=pid, max_seq_length=max_seq_length
+        )
 
-    inp = corpus_df.select("doc_id", "repo", "content_sha", "content")
-    if num_partitions:
-        inp = inp.repartition(num_partitions, "doc_id")
-    return inp.mapInPandas(run, MENTION_SCHEMA)
+    return _detect_stage(corpus_df, make_decode, num_partitions)
 
 
 def sl_token_label_stream(
@@ -73,24 +54,20 @@ def sl_token_label_stream(
     DuckDB twin is mention_sql.sl_token_labels_ctes."""
     from ..pyfiles import ensure_shipped
 
-    spark = corpus_df.sparkSession
-    ensure_shipped(spark)
+    ensure_shipped(corpus_df.sparkSession)
     types = list(types or QUERIES.keys())
-    bc_types = spark.sparkContext.broadcast(types)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = DeterministicSLScorer(bc_types.value)
+        scorer = DeterministicSLScorer(types)
         for pdf in batches:
-            rows: dict = {"pid": [], "pos": [], "label": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                _toks, labels = sl_merged_labels(
+            rows = [
+                (int(doc_id), pos, lab)
+                for doc_id, content in zip(pdf["doc_id"], pdf["content"])
+                for pos, lab in enumerate(sl_merged_labels(
                     scorer, tokenize_text(content), max_seq_length
-                )
-                for pos, lab in enumerate(labels):
-                    rows["pid"].append(int(doc_id))
-                    rows["pos"].append(pos)
-                    rows["label"].append(lab)
-            yield pd.DataFrame(rows)
+                )[1])
+            ]
+            yield pd.DataFrame(rows, columns=["pid", "pos", "label"])
 
     inp = corpus_df.select("doc_id", "content")
     if num_partitions:
@@ -106,41 +83,16 @@ def detect_mentions_sl_crf(
 ) -> DataFrame:
     """Model family #4: flat SL + 65-label CRF decode
     (api/bert_sl_predictor.py:44-46 with_bilstmcrf=True; kernel/sl_crf.py).
-    Same Spark plan as detect_mentions_sl — only the decode kernel differs."""
+    Same plan as detect_mentions_sl — only the decode kernel differs."""
     from ..kernel.scorer import DeterministicQAScorer
     from ..kernel.sl_crf import sl_crf_predict
-    from ..pyfiles import ensure_shipped
 
-    spark = corpus_df.sparkSession
-    ensure_shipped(spark)
     types = list(types or QUERIES.keys())
-    bc_types = spark.sparkContext.broadcast(types)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_decode():
         scorer = DeterministicQAScorer()
-        tps = bc_types.value
-        for pdf in batches:
-            rows: dict = {k: [] for k in (
-                "doc_id", "repo", "content_sha", "type",
-                "start_pos", "end_pos", "text")}
-            for doc_id, repo, sha, content in zip(
-                pdf["doc_id"], pdf["repo"], pdf["content_sha"], pdf["content"]
-            ):
-                toks = tokenize_text(content)
-                for (_pid, typ, s, e, txt) in sl_crf_predict(
-                    scorer, tps, toks, pid=int(doc_id),
-                    max_seq_length=max_seq_length,
-                ):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["repo"].append(repo)
-                    rows["content_sha"].append(sha)
-                    rows["type"].append(typ)
-                    rows["start_pos"].append(s)
-                    rows["end_pos"].append(e)
-                    rows["text"].append(txt)
-            yield pd.DataFrame(rows)
+        return lambda toks, pid: sl_crf_predict(
+            scorer, types, toks, pid=pid, max_seq_length=max_seq_length
+        )
 
-    inp = corpus_df.select("doc_id", "repo", "content_sha", "content")
-    if num_partitions:
-        inp = inp.repartition(num_partitions, "doc_id")
-    return inp.mapInPandas(run, MENTION_SCHEMA)
+    return _detect_stage(corpus_df, make_decode, num_partitions)

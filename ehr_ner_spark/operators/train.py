@@ -138,10 +138,8 @@ def training_frame(
             )
 
     inp = corpus_df.select("doc_id", "content")
-    if num_partitions:
+    if num_partitions:  # None keeps the caller's partitioning
         inp = inp.repartition(num_partitions, "doc_id")
-    else:  # follow session parallelism (like detect_mentions)
-        inp = inp.repartition("doc_id")
     return inp.mapInPandas(label_partition, _TRAIN_SCHEMA)
 
 

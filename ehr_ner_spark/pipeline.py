@@ -44,8 +44,9 @@ def run_pipeline(
     """
     fail_after = fail_after or {}
     t = IceTable(table_root)
+    frames: dict = {}
 
-    if not t.stage_complete("mentions", n_buckets):
+    def detect() -> DataFrame:
         pending = t.pending_buckets("mentions", n_buckets)
         bucket = bucket_of("doc_id", n_buckets)
         tasks = min(len(pending), spark.sparkContext.defaultParallelism)
@@ -54,34 +55,26 @@ def run_pipeline(
             .where(bucket.isin(pending))
             .repartitionByRange(tasks, bucket)
         )
-        m = detect_mentions(docs, num_partitions=0)
-        t.write_stage(
-            m, "mentions", bucket_key="doc_id", n_buckets=n_buckets,
-            fail_after_buckets=fail_after.get("mentions"),
-        )
-        if "mentions" in fail_after:
-            raise RuntimeError("simulated crash after partial mentions commit")
-    mentions = t.read_stage(spark, "mentions")
+        return detect_mentions(docs)
 
-    if not t.stage_complete("canon", n_buckets):
-        canon = canonicalize(mentions)
-        t.write_stage(
-            canon, "canon", bucket_key="text", n_buckets=n_buckets,
-            fail_after_buckets=fail_after.get("canon"),
-        )
-        if "canon" in fail_after:
-            raise RuntimeError("simulated crash after partial canon commit")
-    canon_map = t.read_stage(spark, "canon")
-
-    if not t.stage_complete("triples", n_buckets):
-        trip = canonical_triples(mentions, canon_map)
-        t.write_stage(
-            trip, "triples", bucket_key="doc_id", n_buckets=n_buckets,
-            fail_after_buckets=fail_after.get("triples"),
-        )
-        if "triples" in fail_after:
-            raise RuntimeError("simulated crash after partial triples commit")
-    return t.read_stage(spark, "triples")
+    stages = (
+        ("mentions", "doc_id", detect),
+        ("canon", "text", lambda: canonicalize(frames["mentions"])),
+        ("triples", "doc_id",
+         lambda: canonical_triples(frames["mentions"], frames["canon"])),
+    )
+    for stage, bucket_key, build in stages:
+        if not t.stage_complete(stage, n_buckets):
+            t.write_stage(
+                build(), stage, bucket_key=bucket_key, n_buckets=n_buckets,
+                fail_after_buckets=fail_after.get(stage),
+            )
+            if stage in fail_after:
+                raise RuntimeError(
+                    f"simulated crash after partial {stage} commit"
+                )
+        frames[stage] = t.read_stage(spark, stage)
+    return frames["triples"]
 
 
 def main(argv: list[str] | None = None) -> None:

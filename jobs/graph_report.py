@@ -74,7 +74,7 @@ def main() -> None:
     # num_partitions=2*cpus: the scorer stage is this job's most expensive
     # pass, and a raw parquet scan of the small corpus may arrive in 1-2
     # tasks — repartition so the battery scoring actually uses the cores
-    # (num_partitions=0 would keep whatever the scan produced)
+    # (the default, None, would keep whatever the scan produced)
     mentions = detect_mentions(
         corpus(spark, sf_dir), num_partitions=2 * cpus
     ).persist()

@@ -98,7 +98,7 @@ def main() -> None:
     ).format("noop").save()
 
     t0 = time.time()
-    m = detect_mentions(big, num_partitions=0).persist()
+    m = detect_mentions(big).persist()
     n_mentions = m.count()
     t_detect = time.time() - t0
 

@@ -81,7 +81,7 @@ def test_crf_differs_from_softmax_somewhere():
 def test_detect_mentions_crf_spark(spark, sf_dir):
     """Spark operator end-to-end + plan shape (single repartition, Arrow)."""
     from ehr_ner_spark.corpus import corpus
-    from ehr_ner_spark.operators.crf_detect import detect_mentions_crf
+    from ehr_ner_spark.operators.mention_detect import detect_mentions_crf
 
     c = corpus(spark, sf_dir).limit(30)
     out = detect_mentions_crf(c, num_partitions=4).collect()

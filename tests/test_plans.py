@@ -41,8 +41,25 @@ def test_top_customers_broadcasts_dimensions(spark, sf_dir):
     assert "BroadcastHashJoin" in plan  # nation (and small sides via AQE)
 
 
-def test_detect_mentions_single_repartition(spark, sf_dir):
-    df = detect_mentions(corpus(spark, sf_dir), num_partitions=8)
+def _detector(family):
+    """The span-detection operator of one model family."""
+    from ehr_ner_spark.operators import mention_detect, mrc_detect, sl_detect
+
+    return {
+        "qasl": mention_detect.detect_mentions,
+        "qasl_crf": mention_detect.detect_mentions_crf,
+        "sl": sl_detect.detect_mentions_sl,
+        "sl_crf": sl_detect.detect_mentions_sl_crf,
+        "mrc": mrc_detect.detect_mentions_mrc,
+    }[family]
+
+
+DETECT_FAMILIES = ["qasl", "qasl_crf", "sl", "sl_crf", "mrc"]
+
+
+@pytest.mark.parametrize("family", DETECT_FAMILIES)
+def test_detect_mentions_single_repartition(spark, sf_dir, family):
+    df = _detector(family)(corpus(spark, sf_dir), num_partitions=8)
     plan = _plan(df)
     # exactly one shuffle: the explicit doc-hash repartition before scoring
     assert plan.count("Exchange") == 1
@@ -50,6 +67,14 @@ def test_detect_mentions_single_repartition(spark, sf_dir):
     # scorer runs as one Arrow-batched python stage, not row-at-a-time
     assert "MapInPandas" in plan or "mapInPandas" in plan
     assert "BatchEvalPython" not in plan  # no row-wise Python UDF anywhere
+
+
+@pytest.mark.parametrize("family", DETECT_FAMILIES)
+def test_detect_mentions_default_keeps_partitioning(spark, sf_dir, family):
+    """num_partitions=None scores the caller's partitions: no shuffle."""
+    plan = _plan(_detector(family)(corpus(spark, sf_dir)))
+    assert "Exchange" not in plan
+    assert "MapInPandas" in plan or "mapInPandas" in plan
 
 
 def test_mentions_projection_prunes_content_early(spark, sf_dir):
@@ -176,32 +201,6 @@ def test_minhash_pairs_reuses_persisted_shingles(spark, sf_dir):
 
     df = minhash_lsh_pairs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     assert "InMemoryTableScan" in _plan(df)
-
-
-def test_mrc_detect_single_repartition(spark, sf_dir):
-    """mrc_detect mirrors the flagship plan shape: one explicit doc-hash
-    exchange, one Arrow-batched Python stage, no row-wise Python UDFs."""
-    from ehr_ner_spark.operators.mrc_detect import detect_mentions_mrc
-
-    df = detect_mentions_mrc(corpus(spark, sf_dir), num_partitions=8)
-    plan = _plan(df)
-    assert plan.count("Exchange") == 1
-    assert "hashpartitioning(doc_id" in plan
-    assert "MapInPandas" in plan or "mapInPandas" in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_sl_crf_detect_single_repartition(spark, sf_dir):
-    """The SL-CRF decode path keeps the same plan as detect_mentions_sl:
-    one doc-hash exchange, one Arrow stage (only the decode kernel differs)."""
-    from ehr_ner_spark.operators.sl_detect import detect_mentions_sl_crf
-
-    df = detect_mentions_sl_crf(corpus(spark, sf_dir), num_partitions=8)
-    plan = _plan(df)
-    assert plan.count("Exchange") == 1
-    assert "hashpartitioning(doc_id" in plan
-    assert "MapInPandas" in plan or "mapInPandas" in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_linking_surface_width_and_hash_verify(spark, sf_dir):

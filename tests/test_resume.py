@@ -112,6 +112,31 @@ def test_resume_scores_only_pending_buckets(spark, sf_dir, tmp_path, monkeypatch
     assert resumed == golden
 
 
+@pytest.mark.parametrize(
+    "text", [None, " \n\t "], ids=["empty_corpus", "whitespace_corpus"]
+)
+def test_pipeline_without_mentions_reruns(spark, sf_dir, tmp_path, text):
+    """A corpus with no mention commits every stage with no data file; a
+    fresh run and a rerun of the same table both return 0 triples."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if text is None:
+        docs = docs.limit(0)
+    else:
+        docs = docs.limit(5).withColumn("text", F.lit(text))
+    src = str(tmp_path / "sf")
+    docs.write.parquet(f"{src}/documents.parquet")
+
+    root = str(tmp_path / "kg")
+    fresh = run_pipeline(spark, src, root, n_buckets=4)
+    assert fresh.count() == 0
+    assert IceTable(root).stage_complete("triples", 4)
+    rerun = run_pipeline(spark, src, root, n_buckets=4)
+    assert rerun.count() == 0
+    assert rerun.columns == fresh.columns
+
+
 def test_main_commit_conflict_says_to_reinvoke(monkeypatch, tmp_path):
     """A commit conflict ends the spark-submit entrypoint with a message
     that tells the caller to re-invoke it to resume."""
