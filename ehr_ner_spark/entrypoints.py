@@ -626,8 +626,8 @@ def _entity_components_oracle() -> str:
 @_register("kg_entity_components", oracle=_entity_components_oracle)
 def kg_entity_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weakly connected components of the entity co-occurrence graph —
-    the strategy-selected CC operator (Arrow union-find / pointer
-    jumping) exposed as its own driver-checked query rather than only
+    the strategy-selected CC operator (Arrow min-root hooking /
+    pointer jumping) exposed as its own driver-checked query rather than only
     embedded inside canonicalization; md5-60bit entity ids make the
     recursive-CTE DuckDB twin exact (operators/communities.py)."""
     from .operators.communities import entity_components, entity_edges
@@ -6709,11 +6709,11 @@ def rel_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg add-column schema evolution on the engine's snapshot
     table: half the corpus commits under schema v1 (doc_id, lang), the
-    other half under v2 (+ n_chars); the merged read surfaces the new
-    column with NULLs for pre-evolution files — NO old data file is
-    rewritten, which is the property that makes adding a column to a
-    100-TB table a metadata operation
-    (io/icetable.py::read_stage_merged)."""
+    other half under v2 (+ n_chars); the evolved stage records the v2
+    schema, and reading under it surfaces the new column with NULLs for
+    pre-evolution files — NO old data file is rewritten, which is the
+    property that makes adding a column to a 100-TB table a metadata
+    operation (io/icetable.py::IceTable.read_stage)."""
     import shutil
     import tempfile
 
@@ -6732,8 +6732,8 @@ def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "n_chars"),
             "docs_v2", bucket_key="doc_id", n_buckets=4,
         )
-        # one stage, two schema generations: merge the two manifests'
-        # files through the schema-merging read
+        # one stage, two schema generations: the two manifests' files
+        # under the evolved (v2) table schema
         snap = t.current_snapshot()
         merged_stage = dict(snap["stages"]["docs"])
         v2 = snap["stages"]["docs_v2"]
@@ -6743,11 +6743,13 @@ def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             m["files"] = m["files"] + meta["files"]
             m["rows"] = m.get("rows", 0) + meta["rows"]
             merged_buckets[b] = m
-        snap["stages"]["evolved"] = {**merged_stage, "buckets": merged_buckets}
+        snap["stages"]["evolved"] = {
+            **merged_stage, "buckets": merged_buckets, "schema": v2["schema"],
+        }
         snap["seq"] += 1
         t._commit(snap)
         out = (
-            t.read_stage_merged(spark, "evolved")
+            t.read_stage(spark, "evolved")
             .groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),

@@ -5,11 +5,21 @@ Layout::
 
     <root>/
       data/<stage>/bucket=<i>/part-*.parquet     (bucket-partitioned data)
-      snapshots/snap-<seq>.json                  (manifest: per-bucket files,
-                                                  row counts, stage schema,
-                                                  lineage, metrics)
+      deletes/<stage>/eqdel-*.parquet            (equality-delete key files)
+      snapshots/snap-<seq>.json                  (manifest: per stage, the
+                                                  bucket map, its schema and
+                                                  delete files; lineage)
       CURRENT                                    (name of live snapshot;
                                                   atomically replaced)
+
+A stage's manifest entry maps each committed bucket to its ``files`` and
+``rows`` and records the stage's Spark schema, written by its latest
+commit.  Every read is one scan of the files a manifest lists under that
+recorded schema: parquet inference is skipped, a stage that committed no
+file reads as an empty frame, and a file written before a column was
+added reads NULL in it (Iceberg's add-column evolution; old data files
+never rewrite).  Each equality-delete file's entry records its key
+schema the same way, so no read of the table infers a schema.
 
 Reference analog: the FileLock-guarded feature cache keyed by stage
 parameters (/root/reference/utils/feaproducer.py:57-99) and the
@@ -49,9 +59,10 @@ import fcntl
 import json
 import os
 import random
+import shutil
 import time
 import uuid
-from typing import Dict, Optional
+from typing import Callable, Dict, Optional
 
 import pyarrow.parquet as pq
 
@@ -167,6 +178,84 @@ class IceTable:
         finally:
             os.close(fd)  # releases the flock; the lock FILE persists
 
+    @staticmethod
+    def _successor(prev: dict, stage: str, st: dict, entry: dict) -> dict:
+        """The snapshot after ``prev``: ``stage``'s manifest entry replaced
+        by ``st`` and ``entry`` appended to the lineage."""
+        return {
+            "seq": prev["seq"] + 1,
+            "parent_seq": prev["seq"],
+            "stages": {**prev.get("stages", {}), stage: st},
+            "lineage": (prev.get("lineage") or []) + [entry],
+        }
+
+    def _commit_meta(self, stage: str, merge: Callable[[dict], dict],
+                     entry: dict, what: str) -> dict:
+        """Optimistic metadata-only commit: ``merge`` maps the stage's live
+        manifest entry to the new one, ``entry`` is appended to the
+        lineage, and the result is CAS'd in against the parent it was
+        built from.  On conflict (another writer advanced CURRENT
+        meanwhile) the merge re-runs against the new CURRENT — this
+        writer's files are already durable, so a retry rewrites only
+        metadata (Iceberg's concurrent-append fast path).  Bounded +
+        jittered backoff: under sustained contention the table surfaces
+        an error instead of livelocking.  A :class:`CommitConflict`
+        raised by ``merge`` itself propagates at once, unretried."""
+        for attempt in range(self.MAX_META_RETRIES):
+            prev = self.current_snapshot() or {"seq": -1, "stages": {}}
+            st = merge(dict(prev.get("stages", {}).get(stage, {"buckets": {}})))
+            snapshot = self._successor(prev, stage, st, entry)
+            try:
+                self._commit(snapshot, expect_parent=prev["seq"])
+                return snapshot
+            except CommitConflict:
+                time.sleep(random.uniform(0, 0.002 * (1 + attempt)))
+        raise CommitConflict(
+            f"{what} on stage {stage!r} lost the CAS race "
+            f"{self.MAX_META_RETRIES} times — table under sustained "
+            "contention; its files are durable, re-invoke to retry the "
+            "metadata merge"
+        )
+
+    def _write_one_file(self, df: DataFrame, dst_dir: str,
+                        name: str) -> tuple[str, int]:
+        """Write ``df`` as the ONE parquet file ``dst_dir/name``: a
+        ``coalesce(1)`` job into a hidden temp dir, then an atomic rename.
+        Returns the file's table-relative path and its row count."""
+        tmp = os.path.join(dst_dir, f".job-{uuid.uuid4().hex[:8]}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        (part,) = [fn for fn in os.listdir(tmp) if fn.endswith(".parquet")]
+        fp = os.path.join(dst_dir, name)
+        os.replace(os.path.join(tmp, part), fp)
+        shutil.rmtree(tmp, ignore_errors=True)
+        return os.path.relpath(fp, self.root), pq.ParquetFile(fp).metadata.num_rows
+
+    def _read(self, spark: SparkSession, schema: str, files: list) -> DataFrame:
+        """The one parquet read of table files: ``files`` (table-relative)
+        under ``schema``, the JSON schema their manifest entry records.  No
+        inference job runs, an empty ``files`` reads as an empty frame of
+        that schema, and a column a file lacks reads NULL."""
+        return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(
+            *(os.path.join(self.root, f) for f in files))
+
+    def _scan(self, spark: SparkSession, snap: Optional[dict], stage: str,
+              deletes: bool, bucket: Optional[str] = None) -> DataFrame:
+        """The one read of a stage: the files ``snap``'s manifest lists
+        (all buckets, or only ``bucket``) under the stage's recorded
+        schema, anti-joined against every equality-delete file of the
+        stage when ``deletes`` is set.  The delete frame is
+        delete-batch-sized, so the anti-join broadcasts; the data side
+        never rewrites or shuffles."""
+        st = (snap or {}).get("stages", {}).get(stage)
+        if st is None:
+            raise FileNotFoundError(f"stage {stage} has no committed snapshot")
+        metas = st["buckets"].values() if bucket is None else [st["buckets"][bucket]]
+        df = self._read(spark, st["schema"], [f for m in metas for f in m["files"]])
+        for d in (st.get("delete_files") or []) if deletes else []:
+            keys = self._read(spark, d["schema"], [d["file"]])
+            df = df.join(F.broadcast(keys), d["key_col"], "left_anti")
+        return df
+
     # -- stage state --------------------------------------------------------
     def committed_buckets(self, stage: str) -> Dict[int, dict]:
         snap = self.current_snapshot()
@@ -204,115 +293,64 @@ class IceTable:
             return self.current_snapshot()
 
         stage_dir = os.path.join(self.root, "data", stage)
-        schema = df.schema.json()  # read_stage's frame when no file is written
+        schema = df.schema.json()  # the stage's read schema
         bucketed = df.withColumn(
             BUCKET_COL, bucket_of(bucket_key, n_buckets)
         ).where(F.col(BUCKET_COL).isin(pending))
         # one output dir per bucket; Spark writes buckets in parallel
         tmp_dir = os.path.join(stage_dir, f".job-{uuid.uuid4().hex[:8]}")
         bucketed.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(tmp_dir)
-
         wall_ms = int((time.time() - t0) * 1000)
-        new_buckets: Dict[int, dict] = {}
+
+        new_buckets: Dict[str, dict] = {}
         for b in pending:
             src = os.path.join(tmp_dir, f"{BUCKET_COL}={b}")
             dst = os.path.join(stage_dir, f"bucket={b}")
+            os.makedirs(dst, exist_ok=True)
             files, rows = [], 0
-            if os.path.isdir(src):
-                os.makedirs(dst, exist_ok=True)
-                for fn in sorted(os.listdir(src)):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    os.replace(os.path.join(src, fn), os.path.join(dst, fn))
-                    fp = os.path.join(dst, fn)
-                    rows += pq.ParquetFile(fp).metadata.num_rows
-                    files.append(os.path.relpath(fp, self.root))
-            else:  # empty bucket: still committed (zero rows)
-                os.makedirs(dst, exist_ok=True)
-            new_buckets[b] = {
-                "files": files,
-                "rows": rows,
-                "wall_ms": wall_ms // max(len(pending), 1),
-            }
+            # an empty bucket has no src dir: still committed (zero rows)
+            for fn in sorted(os.listdir(src)) if os.path.isdir(src) else []:
+                if not fn.endswith(".parquet"):
+                    continue
+                fp = os.path.join(dst, fn)
+                os.replace(os.path.join(src, fn), fp)
+                rows += pq.ParquetFile(fp).metadata.num_rows
+                files.append(os.path.relpath(fp, self.root))
+            new_buckets[str(b)] = {"files": files, "rows": rows}
             if fail_after_buckets is not None and len(new_buckets) >= fail_after_buckets:
                 break
-        # clean temp job dir remnants
-        import shutil
-
         shutil.rmtree(tmp_dir, ignore_errors=True)
 
-        # optimistic commit: build the snapshot against the CURRENT parent
-        # and CAS it in; on conflict (another writer advanced CURRENT while
-        # this job was writing data files) re-read and re-merge — the data
-        # files this writer produced are already on disk and bucket
-        # manifests merge disjointly, so the retry is metadata-only
-        # (Iceberg's concurrent-append fast path).  Bounded + jittered
-        # backoff: under sustained contention the table surfaces an
-        # error instead of livelocking.
-        for _attempt in range(self.MAX_META_RETRIES):
-            prev = self.current_snapshot() or {"seq": -1, "stages": {}}
-            stages = dict(prev.get("stages", {}))
-            st = dict(stages.get(stage, {"buckets": {}}))
-            buckets = dict(st.get("buckets", {}))
+        def merge(st: dict) -> dict:
+            buckets = st.get("buckets", {})
             # two writers racing on the SAME (stage, bucket) would
             # last-write-win on the manifest entry, silently dropping one
             # writer's files — that's duplicated work plus a lost update,
             # not a mergeable append.  Disjoint-bucket appends (the resume
             # and multi-stage cases) merge cleanly; overlap is an error.
-            overlap = set(buckets) & {str(k) for k in new_buckets}
+            overlap = set(buckets) & set(new_buckets)
             if overlap:
                 raise CommitConflict(
                     f"stage {stage!r} buckets {sorted(overlap)} were "
                     "committed concurrently by another writer — this "
                     "writer's recompute of them is redundant, not mergeable"
                 )
-            buckets.update({str(k): v for k, v in new_buckets.items()})
-            st["buckets"] = buckets
-            st["n_buckets"] = n_buckets
-            st["bucket_key"] = bucket_key
-            st["schema"] = schema
-            stages[stage] = st
-            snapshot = {
-                "seq": prev["seq"] + 1,
-                "parent_seq": prev["seq"],
-                "stages": stages,
-                "lineage": (prev.get("lineage") or [])
-                + [
-                    {
-                        "stage": stage,
-                        "committed_buckets": sorted(new_buckets),
-                        "rows": sum(v["rows"] for v in new_buckets.values()),
-                        "wall_ms": wall_ms,
-                    }
-                ],
-            }
-            try:
-                self._commit(snapshot, expect_parent=prev["seq"])
-                return snapshot
-            except CommitConflict:
-                time.sleep(random.uniform(0, 0.002 * (1 + _attempt)))
-        raise CommitConflict(
-            f"stage {stage!r} append lost the CAS race "
-            f"{self.MAX_META_RETRIES} times — table under sustained "
-            "contention; data files are durable, re-invoke to retry"
-        )
+            return {**st, "buckets": {**buckets, **new_buckets},
+                    "n_buckets": n_buckets, "bucket_key": bucket_key,
+                    "schema": schema}
+
+        entry = {
+            "stage": stage,
+            "committed_buckets": sorted(map(int, new_buckets)),
+            "rows": sum(v["rows"] for v in new_buckets.values()),
+            "wall_ms": wall_ms,
+        }
+        return self._commit_meta(stage, merge, entry, "append")
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
         """Read only the files listed in the CURRENT manifest; a stage that
         committed no file reads as an empty frame of its recorded schema."""
-        snap = self.current_snapshot()
-        if not snap or stage not in snap.get("stages", {}):
-            raise FileNotFoundError(f"stage {stage} has no committed snapshot")
-        st = snap["stages"][stage]
-        files = []
-        for b in st["buckets"].values():
-            files.extend(os.path.join(self.root, f) for f in b["files"])
-        if not files:
-            if "schema" not in st:
-                raise FileNotFoundError(f"stage {stage} committed but empty")
-            schema = StructType.fromJson(json.loads(st["schema"]))
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(*files).drop(BUCKET_COL)
+        return self._scan(spark, self.current_snapshot(), stage, deletes=False)
 
     # -- maintenance: compaction, snapshot expiry, orphan GC ----------------
     def list_snapshots(self) -> list:
@@ -358,58 +396,23 @@ class IceTable:
         # rewritten data (Iceberg's rewrite_data_files with delete
         # compaction): after the rewrite the new manifest carries no
         # delete files and plain reads need no merge-on-read join
-        delete_specs = st.get("delete_files") or []
-        del_frames = [
-            (d["key_col"],
-             spark.read.parquet(os.path.join(self.root, d["file"])))
-            for d in delete_specs
-        ]
-        new_buckets: Dict[int, dict] = {}
-        for b_str, meta in sorted(st["buckets"].items(), key=lambda kv: int(kv[0])):
-            b = int(b_str)
-            dst = os.path.join(stage_dir, f"bucket={b}")
+        new_buckets: Dict[str, dict] = {}
+        for b, meta in sorted(st["buckets"].items(), key=lambda kv: int(kv[0])):
             if not meta["files"]:
                 new_buckets[b] = dict(meta)
                 continue
-            srcs = [os.path.join(self.root, f) for f in meta["files"]]
-            tmp = os.path.join(stage_dir, f".compact-{uuid.uuid4().hex[:8]}")
-            bucket_df = spark.read.parquet(*srcs)
-            for key_col, keys in del_frames:
-                bucket_df = bucket_df.join(
-                    F.broadcast(keys.select(F.col(key_col))),
-                    key_col, "left_anti",
-                )
-            bucket_df.coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            (part,) = [
-                fn for fn in sorted(os.listdir(tmp)) if fn.endswith(".parquet")
-            ]
-            out_name = f"compact-{snap['seq'] + 1:06d}-{uuid.uuid4().hex[:8]}.parquet"
-            os.replace(os.path.join(tmp, part), os.path.join(dst, out_name))
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-            fp = os.path.join(dst, out_name)
-            new_buckets[b] = {
-                "files": [os.path.relpath(fp, self.root)],
-                "rows": pq.ParquetFile(fp).metadata.num_rows,
-                "wall_ms": meta.get("wall_ms", 0),
-            }
-        stages = dict(snap["stages"])
-        stages[stage] = {
-            **st, "buckets": {str(k): v for k, v in new_buckets.items()},
-            "delete_files": [],
-        }
-        snapshot = {
-            "seq": snap["seq"] + 1,
-            "parent_seq": snap["seq"],
-            "stages": stages,
-            "lineage": (snap.get("lineage") or [])
-            + [{"stage": stage, "compacted": True,
-                "folded_delete_files": len(delete_specs),
-                "rows": sum(v["rows"] for v in new_buckets.values())}],
-        }
+            rel, rows = self._write_one_file(
+                self._scan(spark, snap, stage, deletes=True, bucket=b),
+                os.path.join(stage_dir, f"bucket={b}"),
+                f"compact-{snap['seq'] + 1:06d}-{uuid.uuid4().hex[:8]}.parquet",
+            )
+            new_buckets[b] = {"files": [rel], "rows": rows}
+        snapshot = self._successor(
+            snap, stage, {**st, "buckets": new_buckets, "delete_files": []},
+            {"stage": stage, "compacted": True,
+             "folded_delete_files": len(st.get("delete_files") or []),
+             "rows": sum(v["rows"] for v in new_buckets.values())},
+        )
         self._commit(snapshot, expect_parent=snap["seq"])
         return snapshot
 
@@ -476,42 +479,9 @@ class IceTable:
         broadcast anti-joins like :meth:`read_stage_mor`.  Traveling to a
         post-delete, pre-compaction snapshot must not resurrect the
         deleted rows (Iceberg v2 scan semantics are per-snapshot)."""
-        snap = self.snapshot_at(seq)
-        if stage not in snap.get("stages", {}):
-            raise FileNotFoundError(f"stage {stage} absent at seq={seq}")
-        files = []
-        for b in snap["stages"][stage]["buckets"].values():
-            files.extend(os.path.join(self.root, f) for f in b["files"])
-        if not files:
-            raise FileNotFoundError(f"stage {stage} empty at seq={seq}")
-        df = spark.read.parquet(*files).drop(BUCKET_COL)
-        for d in snap["stages"][stage].get("delete_files") or []:
-            keys = spark.read.parquet(os.path.join(self.root, d["file"]))
-            df = df.join(
-                F.broadcast(keys.select(F.col(d["key_col"]))),
-                d["key_col"], "left_anti",
-            )
-        return df
+        return self._scan(spark, self.snapshot_at(seq), stage, deletes=True)
 
-
-    # -- schema evolution + merge-on-read equality deletes ------------------
-
-    def read_stage_merged(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Schema-evolution read: like :meth:`read_stage` but with parquet
-        schema merging, so files committed BEFORE a column was added are
-        read with NULLs in the new column — Iceberg's add-column evolution
-        semantics (new columns are optional; old data files never rewrite).
-        """
-        snap = self.current_snapshot()
-        if not snap or stage not in snap.get("stages", {}):
-            raise FileNotFoundError(f"stage {stage} has no committed snapshot")
-        files = []
-        for b in snap["stages"][stage]["buckets"].values():
-            files.extend(os.path.join(self.root, f) for f in b["files"])
-        return (
-            spark.read.option("mergeSchema", "true").parquet(*files)
-            .drop(BUCKET_COL)
-        )
+    # -- merge-on-read equality deletes ---------------------------------------
 
     def commit_equality_deletes(
         self, spark: SparkSession, stage: str, key_col: str, keys: DataFrame
@@ -526,65 +496,24 @@ class IceTable:
         snap = self.current_snapshot()
         if not snap or stage not in snap.get("stages", {}):
             raise FileNotFoundError(f"stage {stage} has no committed snapshot")
-        ddir = os.path.join(self.root, "deletes", stage)
-        os.makedirs(ddir, exist_ok=True)
-        tmp = os.path.join(ddir, f".del-{uuid.uuid4().hex[:8]}")
-        keys.select(F.col(key_col)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        (part,) = [
-            fn for fn in sorted(os.listdir(tmp)) if fn.endswith(".parquet")
-        ]
-        name = f"eqdel-{snap['seq'] + 1:06d}-{uuid.uuid4().hex[:8]}.parquet"
-        os.replace(os.path.join(tmp, part), os.path.join(ddir, name))
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-        fp = os.path.join(ddir, name)
-        spec = {
-            "file": os.path.relpath(fp, self.root),
-            "key_col": key_col,
-            "n_keys": pq.ParquetFile(fp).metadata.num_rows,
-        }
-        # optimistic commit (CAS + metadata-only retry): the delete file is
-        # already durable, so on conflict only the manifest rebuilds against
-        # the new CURRENT — a concurrent write_stage commit is never lost.
-        # Bounded like the append path: no livelock under contention.
-        for _attempt in range(self.MAX_META_RETRIES):
-            snap = self.current_snapshot()
-            stages = dict(snap["stages"])
-            st = dict(stages[stage])
-            st["delete_files"] = (st.get("delete_files") or []) + [spec]
-            stages[stage] = st
-            snapshot = {
-                "seq": snap["seq"] + 1,
-                "parent_seq": snap["seq"],
-                "stages": stages,
-                "lineage": (snap.get("lineage") or [])
-                + [{"stage": stage, "equality_deletes": spec}],
-            }
-            try:
-                self._commit(snapshot, expect_parent=snap["seq"])
-                return snapshot
-            except CommitConflict:
-                time.sleep(random.uniform(0, 0.002 * (1 + _attempt)))
-        raise CommitConflict(
-            f"equality-delete commit on stage {stage!r} lost the CAS race "
-            f"{self.MAX_META_RETRIES} times — delete file is durable, "
-            "re-invoke to retry the metadata merge"
+        keys = keys.select(F.col(key_col))
+        rel, n_keys = self._write_one_file(
+            keys,
+            os.path.join(self.root, "deletes", stage),
+            f"eqdel-{snap['seq'] + 1:06d}-{uuid.uuid4().hex[:8]}.parquet",
+        )
+        spec = {"file": rel, "key_col": key_col, "n_keys": n_keys,
+                "schema": keys.schema.json()}  # the key file's read schema
+        # a concurrent write_stage commit is never lost: on conflict only
+        # the manifest rebuilds against the new CURRENT
+        return self._commit_meta(
+            stage,
+            lambda st: {**st, "delete_files": (st.get("delete_files") or []) + [spec]},
+            {"stage": stage, "equality_deletes": spec},
+            "equality-delete commit",
         )
 
     def read_stage_mor(self, spark: SparkSession, stage: str) -> DataFrame:
         """Merge-on-read scan: data files anti-joined against every
-        committed equality-delete file of the stage.  The delete frame is
-        delete-batch-sized, so the anti-join broadcasts; the data side
-        never rewrites or shuffles."""
-        df = self.read_stage(spark, stage)
-        snap = self.current_snapshot()
-        for d in snap["stages"][stage].get("delete_files") or []:
-            keys = spark.read.parquet(os.path.join(self.root, d["file"]))
-            df = df.join(
-                F.broadcast(keys.select(F.col(d["key_col"]))),
-                d["key_col"], "left_anti",
-            )
-        return df
+        committed equality-delete file of the stage."""
+        return self._scan(spark, self.current_snapshot(), stage, deletes=True)

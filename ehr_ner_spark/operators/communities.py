@@ -172,7 +172,7 @@ def entity_components(edges: DataFrame) -> DataFrame:
     """Weakly connected components of the entity co-occurrence graph,
     driven through the engine's strategy-selected CC operator
     (operators/linking.py::connected_components: single-pass Arrow
-    union-find under 2M edges, distributed pointer jumping above).
+    NumPy min-root hooking under 2M edges, distributed pointer jumping above).
 
     Entities get 60-bit ids from the shared md5-hex discipline (exactly
     replayable in DuckDB as ('0x'||substr(md5(ent),1,15))::BIGINT); the

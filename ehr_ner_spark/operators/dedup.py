@@ -209,8 +209,8 @@ def simhash_clusters(docs: DataFrame, text_col: str = "text",
     Scale shape: the quadratic risk lives entirely inside simhash_dedup's
     15-bit band buckets; the component stage sees only the verified
     Hamming<=k edge list (tiny vs the corpus), and CC itself is
-    strategy-selected (single-pass union-find small, pointer jumping
-    large).  Pairs are persisted because connected_components consumes the
+    strategy-selected (single-pass NumPy min-root hooking small, pointer
+    jumping large).  Pairs are persisted because connected_components consumes the
     edge frame twice (strategy probe count + the join rounds)."""
     from ..cache import tracked_persist
     from .linking import connected_components

@@ -375,8 +375,8 @@ def connected_components(
     """Connected components, strategy-selected by size:
 
     * **small graph** (<= ``small_graph_edges``): one shuffle into a
-      single partition and a min-root union-find in an Arrow UDF
-      (row-order-independent, so deterministic);
+      single partition and ``_min_labels`` over the ids' dense indices
+      in an Arrow UDF (row-order-independent, so deterministic);
     * **large graph**: iterative min-id propagation with pointer jumping
       (O(log diameter) rounds, localCheckpoint bounds lineage).
 
@@ -388,6 +388,29 @@ def connected_components(
     if probe <= small_graph_edges:
         return _cc_single_pass(vertices, edges)
     return _cc_iterative(vertices, edges, max_iter)
+
+
+def _min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
+    """Connected components of the undirected graph on dense indices
+    ``0..n-1`` with edges (src, dst): each round hooks every edge's larger
+    root onto its smaller one, then jumps pointers until every index
+    points at a root.  Roots only ever hook onto smaller roots, so the
+    fixed point labels every index with the min index of its component.
+    Hooking roots rather than endpoints keeps the rounds few even on a
+    long path with shuffled ids, where propagating the min label between
+    endpoints needs rounds on the order of the path's length."""
+    lab = np.arange(n)
+    while True:
+        ls, ld = lab[src], lab[dst]
+        new, m = lab.copy(), np.minimum(ls, ld)
+        np.minimum.at(new, ls, m)
+        np.minimum.at(new, ld, m)
+        jumped = new[new]
+        while (jumped != new).any():
+            new, jumped = jumped, jumped[jumped]
+        if (new == lab).all():
+            return lab
+        lab = new
 
 
 def _cc_single_pass(vertices: DataFrame, edges: DataFrame) -> DataFrame:
@@ -404,36 +427,19 @@ def _cc_single_pass(vertices: DataFrame, edges: DataFrame) -> DataFrame:
         [StructField("surface_id", LongType()), StructField("component", LongType())]
     )
 
-    def uf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parent: dict = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        nodes = set()
-        for pdf in batches:
-            for s, d in zip(pdf["src"].to_numpy(), pdf["dst"].to_numpy()):
-                s, d = int(s), int(d)
-                nodes.add(s)
-                nodes.add(d)
-                if s != d:
-                    rs, rd = find(s), find(d)
-                    if rs != rd:  # min root wins -> order-independent
-                        if rs < rd:
-                            parent[rd] = rs
-                        else:
-                            parent[rs] = rd
-        out_ids = sorted(nodes)
-        yield pd.DataFrame(
-            {"surface_id": out_ids, "component": [find(i) for i in out_ids]}
+    def components(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = list(batches)
+        src, dst = (
+            np.concatenate([np.empty(0, np.int64)]
+                           + [p[c].to_numpy(np.int64) for p in pdfs])
+            for c in ("src", "dst")
         )
+        # dense indices in id order: the min index is the min surface id
+        ids, idx = np.unique(np.r_[src, dst], return_inverse=True)
+        lab = _min_labels(idx[: len(src)], idx[len(src):], len(ids))
+        yield pd.DataFrame({"surface_id": ids, "component": ids[lab]})
 
-    return combined.mapInPandas(uf, schema)
+    return combined.mapInPandas(components, schema)
 
 
 def _cc_iterative(vertices: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
@@ -609,17 +615,8 @@ def _link_surfaces(pdf: pd.DataFrame, threshold: float, min_hits: int) -> pd.Dat
     linked = inter / (size[src] + size[dst] - inter) >= threshold
     src, dst = src[linked], dst[linked]
 
-    # components: min-label propagation with pointer jumping; the fixed
-    # point labels every surface with the min index of its component
-    lab = np.arange(n)
-    while True:
-        new, m = lab.copy(), np.minimum(lab[src], lab[dst])
-        np.minimum.at(new, src, m)
-        np.minimum.at(new, dst, m)
-        new = new[new]
-        if (new == lab).all():
-            break
-        lab = new
+    # components (step 7): each surface gets its component's min index
+    lab = _min_labels(src, dst, n)
 
     # election: the first row of each component under (component,
     # -n_mentions, text)

@@ -355,7 +355,7 @@ def semantic_dedup(
        comparison is bounded per cell, never corpus-wide — cross-cell
        near-dups are out of scope by design, exactly as in the paper);
     3. connected components over the pair graph (strategy-selected:
-       Arrow union-find small, pointer jumping large) — a duplicate
+       Arrow min-root hooking small, pointer jumping large) — a duplicate
        GROUP, not just pairs;
     4. representative = min vec_id per cluster (``keep`` flag).
 
@@ -383,7 +383,7 @@ def semantic_dedup(
     )
     verts = assigned.select(F.col("vec_id").alias("surface_id"))
     # comp feeds both the output rows and the cluster-size aggregation —
-    # persist or the union-find/pointer-jumping stage executes twice
+    # persist or the CC stage executes twice
     comp = tracked_persist(connected_components(verts, pairs))
     clustered = comp.select(
         F.col("surface_id").alias("vec_id"),

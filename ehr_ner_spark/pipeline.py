@@ -80,6 +80,7 @@ def run_pipeline(
 def main(argv: list[str] | None = None) -> None:
     """spark-submit entrypoint (north rule launch mode)::
 
+        make dist    # builds dist/ehr_ner_spark.zip from the tree
         spark-submit --py-files dist/ehr_ner_spark.zip \
             -m … ehr_ner_spark/pipeline.py \
             --sf-dir /root/testdata/sf0.01 --table-root /tmp/kg --buckets 16

@@ -2,6 +2,7 @@
 """One-shot graph-analytics report over the knowledge graph (user-facing
 composition of the kg_* graph operators — VERDICT r3 follow-up #9)::
 
+    make dist    # builds dist/ehr_ner_spark.zip from the tree
     spark-submit --py-files dist/ehr_ner_spark.zip jobs/graph_report.py \
         [sf_dir] [out_dir]
 

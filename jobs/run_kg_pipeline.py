@@ -1,5 +1,6 @@
 """spark-submit launcher for the KG pipeline (north-rule launch mode)::
 
+    make dist    # builds dist/ehr_ner_spark.zip from the tree
     spark-submit --py-files dist/ehr_ner_spark.zip jobs/run_kg_pipeline.py \
         --sf-dir /root/testdata/sf0.01 --table-root /tmp/kg --buckets 16
 

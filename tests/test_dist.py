@@ -1,10 +1,12 @@
-"""The committed spark-submit artifact must track the source tree.
+"""The spark-submit artifact must carry exactly the source tree.
 
-Executors launched via the documented ``spark-submit --py-files
-dist/ehr_ner_spark.zip`` contract import kernels from the zip; if the zip
-lags the tree, workers run different code than the driver/oracles expect.
-This gate fails the build whenever the zip and the package diverge by one
-byte (rebuild with ``make dist``).
+Executors launched via the documented ``make dist`` then ``spark-submit
+--py-files dist/ehr_ner_spark.zip`` contract, or shipped the package by
+``pyfiles.ensure_shipped``, import kernels from a zip made by
+``pyfiles.build_zip``; if that zip left out, added or changed a file,
+workers would run different code than the driver/oracles expect.  This
+gate builds the zip afresh and fails whenever it and the package diverge
+by one byte.  The zip itself is a build output, not a committed file.
 """
 
 from __future__ import annotations
@@ -12,9 +14,10 @@ from __future__ import annotations
 import os
 import zipfile
 
+from ehr_ner_spark.pyfiles import build_zip
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "ehr_ner_spark")
-ZIP = os.path.join(REPO, "dist", "ehr_ner_spark.zip")
 
 
 def _tree_files() -> dict[str, bytes]:
@@ -32,14 +35,13 @@ def _tree_files() -> dict[str, bytes]:
     return out
 
 
-def test_dist_zip_matches_tree():
-    assert os.path.exists(ZIP), "dist/ehr_ner_spark.zip missing — run `make dist`"
+def test_dist_zip_matches_tree(tmp_path):
     tree = _tree_files()
-    with zipfile.ZipFile(ZIP) as zf:
+    with zipfile.ZipFile(build_zip(str(tmp_path))) as zf:
         zipped = {n: zf.read(n) for n in zf.namelist() if n.endswith(".py")}
     missing = sorted(set(tree) - set(zipped))
     extra = sorted(set(zipped) - set(tree))
-    assert not missing, f"files missing from dist zip (run `make dist`): {missing}"
-    assert not extra, f"stale files in dist zip (run `make dist`): {extra}"
+    assert not missing, f"files missing from the built zip: {missing}"
+    assert not extra, f"files in the built zip but not the tree: {extra}"
     stale = sorted(rel for rel in tree if tree[rel] != zipped[rel])
-    assert not stale, f"dist zip content differs from tree (run `make dist`): {stale}"
+    assert not stale, f"built zip content differs from tree: {stale}"

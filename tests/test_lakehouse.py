@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from ehr_ner_spark.operators.lakehouse import (
@@ -362,6 +364,92 @@ def test_time_travel_to_post_delete_snapshot_applies_deletes(
     t.compact_stage(spark, "docs")  # CURRENT moves past the delete snapshot
     assert t.read_stage_at(spark, "docs", seq_before).count() == n_all
     assert t.read_stage_at(spark, "docs", snap_del["seq"]).count() == n_kept
+
+
+@pytest.mark.parametrize(
+    "reader, args",
+    [("read_stage", ()), ("read_stage_mor", ()), ("read_stage_at", (0,))],
+)
+def test_zero_file_stage_reads_empty_under_recorded_schema(
+    spark, tmp_path, reader, args
+):
+    """A stage that committed buckets but no data file reads as an empty
+    frame of its recorded schema through every reader, time travel
+    included."""
+    from ehr_ner_spark.io.icetable import IceTable
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    t = IceTable(str(tmp_path / "tbl"))
+    t.write_stage(empty, "docs", bucket_key="doc_id", n_buckets=4)
+    assert t.stage_complete("docs", 4)
+    df = getattr(t, reader)(spark, "docs", *args)
+    assert df.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("doc_id", "bigint"), ("text", "string")
+    ]
+
+
+def test_stage_reads_plan_without_a_spark_job(spark, tmp_path):
+    """Every reader builds its frame from recorded schemas alone: with two
+    equality-delete files committed, planning read_stage, read_stage_mor
+    and read_stage_at runs no Spark job (no parquet schema inference),
+    and compaction folds both delete files."""
+    import uuid
+
+    from ehr_ner_spark.io.icetable import IceTable
+
+    docs = spark.range(200).selectExpr("id as doc_id", "concat('t', id) as text")
+    t = IceTable(str(tmp_path / "tbl"))
+    t.write_stage(docs, "docs", bucket_key="doc_id", n_buckets=4)
+    for lo in (0, 10):
+        t.commit_equality_deletes(
+            spark, "docs", "doc_id", spark.range(lo, lo + 5).selectExpr("id as doc_id")
+        )
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "plan stage reads")
+    try:
+        frames = [t.read_stage(spark, "docs"), t.read_stage_mor(spark, "docs"),
+                  t.read_stage_at(spark, "docs", 2)]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [f.count() for f in frames] == [200, 190, 190]
+    snap = t.compact_stage(spark, "docs")
+    assert snap["lineage"][-1]["folded_delete_files"] == 2
+    assert t.read_stage(spark, "docs").count() == 190
+
+
+def test_added_column_reads_null_in_older_files(spark, sf_dir, tmp_path):
+    """Add-column evolution without schema merging: a stage whose first
+    buckets committed under (doc_id, lang) and whose later buckets
+    committed under (doc_id, lang, n_chars) records the later schema, and
+    the older files read NULL in the added column."""
+    from ehr_ner_spark.io.icetable import IceTable, bucket_of
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "lang", "n_chars"
+    )
+    t = IceTable(str(tmp_path / "tbl"))
+    t.write_stage(docs.select("doc_id", "lang"), "docs",
+                  bucket_key="doc_id", n_buckets=4, fail_after_buckets=2)
+    old = sorted(t.committed_buckets("docs"))
+    t.write_stage(docs, "docs", bucket_key="doc_id", n_buckets=4)
+
+    got = t.read_stage(spark, "docs")
+    assert got.columns == ["doc_id", "lang", "n_chars"]
+    tagged = got.withColumn("old", bucket_of("doc_id", 4).isin(old))
+    stats = {
+        r.old: (r.n, r.n_null)
+        for r in tagged.groupBy("old").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("n_chars").isNull(), 1)).alias("n_null"),
+        ).collect()
+    }
+    n_old = docs.where(bucket_of("doc_id", 4).isin(old)).count()
+    assert n_old > 0
+    assert stats[True] == (n_old, n_old)
+    assert stats[False] == (docs.count() - n_old, 0)
 
 
 def test_same_bucket_concurrent_writers_conflict_not_clobber(

@@ -18,6 +18,7 @@ from ehr_ner_spark.operators.linking import (
     surface_signatures,
     verified_edges,
 )
+from ehr_ner_spark.operators.linking import _min_labels
 
 
 def _mentions_df(spark, rows):
@@ -139,8 +140,9 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_strategies_agree(spark):
-    """Single-pass union-find (small-graph path) == iterative pointer-jump
-    propagation (large-graph path), incl. 64-bit hash-sized ids."""
+    """Single-pass ``_min_labels`` (small-graph path) == iterative
+    pointer-jump propagation (large-graph path), incl. 64-bit hash-sized
+    ids."""
     import random
 
     rng = random.Random(7)
@@ -155,6 +157,42 @@ def test_connected_components_strategies_agree(spark):
     large = {r.surface_id: r.component
              for r in connected_components(v, e, small_graph_edges=0).collect()}
     assert small == large
+
+
+@pytest.mark.parametrize("shape", ["shuffled_path", "random_graph", "shuffled_grid"])
+def test_min_labels_matches_union_find(shape):
+    """``_min_labels`` labels every index with the min index of its
+    component, checked against a union-find, on a long path with shuffled
+    ids (the shape that propagating min labels between endpoints walks
+    one hop a round) and on denser graphs; edges arrive in any order."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    n = 4096
+    if shape == "shuffled_path":
+        v = rng.permutation(n)
+        src, dst = v[:-1], v[1:]
+    elif shape == "random_graph":
+        src, dst = rng.integers(0, n, size=(2, n // 2))
+    else:
+        g = rng.permutation(n).reshape(64, 64)
+        src = np.r_[g[:, :-1].ravel(), g[:-1, ::2].ravel()]
+        dst = np.r_[g[:, 1:].ravel(), g[1:, ::2].ravel()]
+    order = rng.permutation(len(src))
+    src, dst = src[order], dst[order]
+
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in zip(src.tolist(), dst.tolist()):
+        a, b = sorted((find(s), find(d)))
+        parent[b] = a
+    assert _min_labels(src, dst, n).tolist() == [find(i) for i in range(n)]
 
 
 def test_canonical_triples_shape(spark, mentions):
